@@ -102,11 +102,11 @@ CACHE = os.environ.get("BENCH_CACHE_DIR", os.path.join(REPO, ".bench_cache"))
 # full per-query timings + per-cycle scaling samples land here; the stdout
 # line stays compact and carries this path (see module docstring)
 SIDECAR = os.environ.get("BENCH_SIDECAR", os.path.join(REPO, "BENCH_QUERIES.json"))
-# Scaling-level JVM: ParallelGC with a 28g young gen. The pipeline is
-# allocation-heavy (UTF8String per detokenized line) and promotes almost
-# nothing; measured at 32 cores on the 8M corpus: default ParallelGC
-# 9.9-10.2s, -Xmn24g 8.6s, -Xmn28g 7.6-8.1s, -Xmn30g 9.1s, G1 15-19s.
-LEVEL_JAVA = "-XX:+UseParallelGC -Xmn28g"
+# Scaling-level JVM: ParallelGC (measured at 32 cores on the 8M corpus:
+# ParallelGC 9.9-10.2s, G1 15-19s). The heap, young generation included,
+# is sized from the host by get_spark; a fixed -Xmn larger than that heap
+# stops the JVM from starting.
+LEVEL_JAVA = "-XX:+UseParallelGC"
 # 8MB split bins over the 256 ~2.2MB corpus files -> 128 identical scan
 # partitions at EVERY level (2 files/task): 4 balanced waves at 32 cores,
 # 16 at 8. Measured at 32 cores: 128 parts 7.6s, 256 parts 8.1s (2x task

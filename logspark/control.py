@@ -8,14 +8,17 @@ lib_status.py:7-19, libs/lib_database.py:65-151):
   * insert-if-absent (lib_database.py:74-94) -> left ANTI join + append (J2)
   * recovery TSV spill (lib_database.py:220-228) -> atomic commit of data +
     control rows per partition batch (the snapshot IS the recovery unit)
-  * resume (lib_database.py:192-217)        -> anti-join of input partition
-    ids against committed ids (J4): a killed run replays ONLY unprocessed
-    partitions (north_rule resumability)
+  * resume (lib_database.py:192-217)        -> a set difference over control
+    metadata: the pending part ids are range(N) minus the LOADED ids in the
+    store, and the corpus flows through a literal ``part_id`` filter built
+    from them. Like the reference, which skips a LOADED file without
+    opening it, the resume never scans the corpus to decide what to skip: a
+    killed run replays ONLY unprocessed partitions (north_rule resumability)
   * monotonic status (lib_database.py:105-108: a LOADED file is never
     downgraded) -> rank-guarded MERGE semantics in ``merge_status``
 
 Storage is pluggable: parquet directory (tests/sandbox) or Iceberg
-(production — the same dataframes feed ``MERGE INTO``; see job.py).
+(production — the same dataframes feed ``MERGE INTO``).
 """
 
 from __future__ import annotations
@@ -25,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logspark.session import local_table
+
 # status codes, same taxonomy as lib_status.py:14-19
 QUEUE, PARTIAL, LOADED, LOADING, FAILED, INVALID = 0, 1, 2, 9, -1, -9
 
@@ -33,7 +38,6 @@ _STATUS_RANK = {INVALID: 0, FAILED: 1, QUEUE: 2, LOADING: 3, PARTIAL: 4, LOADED:
 
 
 def status_rank(col):
-    expr = F.lit(-1)
     c = None
     for status, rank in _STATUS_RANK.items():
         c = (F.when(col == status, rank) if c is None else c.when(col == status, rank))
@@ -126,10 +130,12 @@ class CheckpointStore:
         self.path = path
 
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:  # noqa: BLE001 — empty store
-            return self.spark.createDataFrame([], CONTROL_SCHEMA)
+        """The control rows. A missing directory is an empty store (the
+        first run); any other read error raises, so a corrupt store is
+        never mistaken for an empty one and replayed in full."""
+        if not self.exists():
+            return local_table(self.spark, [], CONTROL_SCHEMA)
+        return self.spark.read.parquet(self.path)
 
     def committed_ids(self) -> DataFrame:
         return (
@@ -139,6 +145,13 @@ class CheckpointStore:
             .distinct()
         )
 
+    def loaded_ids(self) -> set[int]:
+        """The committed part ids, collected to the driver (bounded by the
+        partition count); no Spark call when the store does not exist."""
+        if not self.exists():
+            return set()
+        return {r[0] for r in self.committed_ids().collect()}
+
     def append(self, rows: DataFrame) -> None:
         rows.write.mode("append").parquet(self.path)
 
@@ -146,11 +159,20 @@ class CheckpointStore:
         return os.path.isdir(self.path)
 
 
-def pending_partitions(corpus_with_pid: DataFrame, store: CheckpointStore) -> DataFrame:
-    """J4 resume anti-join: only not-yet-committed partitions flow."""
-    return corpus_with_pid.join(
-        F.broadcast(store.committed_ids()), on="part_id", how="left_anti"
-    )
+def pending_partitions(
+    corpus_with_pid: DataFrame,
+    store: CheckpointStore,
+    loaded: set[int] | None = None,
+) -> DataFrame:
+    """Only not-yet-committed partitions flow: a literal ``part_id`` filter
+    over the corpus, built from the store's LOADED ids (``loaded``, when
+    the caller has already read them). Nothing committed -> the corpus
+    unchanged."""
+    if loaded is None:
+        loaded = store.loaded_ids()
+    if not loaded:
+        return corpus_with_pid
+    return corpus_with_pid.filter(~F.col("part_id").isin(sorted(loaded)))
 
 
 def merge_status(existing: DataFrame, updates: DataFrame) -> DataFrame:

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logspark.session import local_table
+
 # synthetic-but-deterministic registry ranges over the first IPv4 octet
 GEO_RANGES: list[tuple[int, int, str]] = [
     (0, 63, "apnic"),
@@ -35,9 +37,7 @@ GEO_RANGES: list[tuple[int, int, str]] = [
 
 
 def geo_table(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        GEO_RANGES, "lo int, hi int, region string"
-    )
+    return local_table(spark, GEO_RANGES, "lo int, hi int, region string")
 
 
 def first_octet(ip_col: str = "ip") -> Column:
@@ -111,7 +111,7 @@ SEARCH_ENGINES: list[tuple[str, str]] = [
 
 
 def search_engine_table(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SEARCH_ENGINES, "host string, engine string")
+    return local_table(spark, SEARCH_ENGINES, "host string, engine string")
 
 
 def referrer_host(ref_col: str = "referrer") -> Column:

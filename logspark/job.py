@@ -5,18 +5,24 @@
         --partitions 4096 --run-id run-2026-08-16
 
 Stages (mirrors the reference control loop, SURVEY.md §3 E1/E2/E3):
-  1. read tokenized corpus (Iceberg table or parquet dir)
-  2. assign explicit hash partitions on doc_id (north_rule)
-  3. RESUME: anti-join vs committed control partitions (J4)
-  4. detokenize -> detect -> parse -> enrich -> route (one narrow pass,
+  1. RESUME from control metadata alone: the pending part ids are
+     range(--partitions) minus the LOADED ids in the control store (read
+     only when its directory exists). Nothing pending -> the run reads no
+     corpus, writes nothing, commits nothing and reports rows=0 — the
+     reference likewise skips a LOADED file without opening it
+     (lib_database.py:192-217)
+  2. read the tokenized parquet corpus, assign explicit hash partitions on
+     doc_id (north_rule), keep the pending ones with a literal part_id
+     filter
+  3. detokenize -> detect -> parse -> enrich -> route (one narrow pass,
      observe() counters riding along)
-  5. fan-out write, physically partitioned by (sink, part_id),
+  4. fan-out write, physically partitioned by (sink, part_id),
      'partitioned' distribution by default (one part_id shuffle so each
      directory is written by exactly one task — Iceberg
      write.distribution-mode=hash analog; see sinks.write_fanout for the
      direct/salted alternatives and their measured trade-offs)
-  6. commit per-partition control rows + lineage metrics + date-status
-     rollup (guarded upsert)
+  5. commit per-partition control rows read back from the written sinks
+     (+ lineage rows with --metrics-dir)
 
 Crash-replay commit protocol (parquet fallback for Iceberg's snapshot
 commit; reference analog: per-file status rows, /root/reference/libs/
@@ -31,10 +37,9 @@ lib_database.py:101-117):
     missing control row implies the partition will be rewritten
     idempotently. (Iceberg gets the same via atomic overwritePartitions +
     a control MERGE in one transaction.)
-
-Iceberg: pass --iceberg to read/write through a configured catalog (configs
-shipped here; the sandbox has no catalog so parquet is the tested fallback —
-the control/resume semantics are identical).
+  * part_id = pmod(xxhash64(doc_id), N) is content-only, so range(N) names
+    every partition the corpus can hold. A part id with no corpus rows gets
+    no control row and stays pending: its replay scans and writes nothing.
 """
 
 from __future__ import annotations
@@ -45,7 +50,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from logspark import control, metrics, pipeline, sinks, status
+from logspark import control, metrics, pipeline, sinks
 from logspark.session import get_spark
 
 
@@ -73,7 +78,6 @@ def main(argv: list[str] | None = None) -> int:
         "(sink, part_id) layout writes ~1 file per directory",
     )
     p.add_argument("--cores", type=int, default=None)
-    p.add_argument("--iceberg", action="store_true")
     p.add_argument(
         "--anonymize-ip",
         type=int,
@@ -90,26 +94,20 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = p.parse_args(argv)
 
-    extra = {}
-    if args.iceberg:
-        extra = {
-            "spark.sql.extensions": "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions",
-            "spark.sql.catalog.lake": "org.apache.iceberg.spark.SparkCatalog",
-            "spark.sql.catalog.lake.type": "hadoop",
-            "spark.sql.catalog.lake.warehouse": args.output,
-        }
-    spark = get_spark(cores=args.cores, app="logspark-job", extra=extra)
+    spark = get_spark(cores=args.cores, app="logspark-job")
 
     t0 = time.time()
-    corpus = spark.read.parquet(args.input)
-    corpus = control.with_partition_id(corpus, args.partitions)
-
     store = control.CheckpointStore(spark, args.checkpoint)
-    todo = control.pending_partitions(corpus, store)
+    loaded = store.loaded_ids()
+    pending_ids = [p for p in range(args.partitions) if p not in loaded]
+    if not pending_ids:
+        _report(args.run_id, {"rows_total": 0}, time.time() - t0)
+        return 0
 
-    # the pending part-id set is bounded by --partitions (metadata-sized):
-    # collected once, reused for the write and for partition-pruned stats
-    pending_ids = [r[0] for r in todo.select("part_id").distinct().collect()]
+    corpus = control.with_partition_id(
+        spark.read.parquet(args.input), args.partitions
+    )
+    todo = control.pending_partitions(corpus, store, loaded)
 
     obs = metrics.route_observation()
     routed = pipeline.routed_hits(spark, todo, observation=obs)
@@ -145,11 +143,8 @@ def main(argv: list[str] | None = None) -> int:
         partition_cols=["sink", "part_id"],
     )
 
-    try:
-        observed = obs.get
-    except Exception:  # noqa: BLE001 — zero pending rows => no observed row
-        observed = {"rows_total": 0}
-    if observed.get("rows_total", 0) and not metrics.conservation_ok(observed):
+    observed = obs.get
+    if not metrics.conservation_ok(observed):
         print(f"CONSERVATION VIOLATION: {observed}", file=sys.stderr)
         return 2
 
@@ -158,16 +153,17 @@ def main(argv: list[str] | None = None) -> int:
     # file-listing time — cost is proportional to THIS run's rows (and only
     # the route column is read), never to accumulated history. Reading back
     # what was actually written (vs aggregating `routed` pre-write) makes
-    # the control row attest to durable rows. In Iceberg mode this comes
-    # free from the committed snapshot's manifest metadata instead.
-    if pending_ids:
+    # the control row attest to durable rows. (An Iceberg table would give
+    # this free from the committed snapshot's manifest metadata.) A run
+    # whose pending part ids hold no corpus rows wrote nothing, so it has
+    # nothing to commit and maybe no sink files to read back.
+    if observed["rows_total"]:
         this_run = (
             spark.read.parquet(args.output)
             .filter(F.col("part_id").isin(pending_ids))
             .select("part_id", "route")
         )
-        stats = control.partition_stats(this_run, args.run_id)
-        store.append(stats)
+        store.append(control.partition_stats(this_run, args.run_id))
 
         if args.metrics_dir:
             # lineage from the SAME pruned two-column readback — never from
@@ -178,13 +174,16 @@ def main(argv: list[str] | None = None) -> int:
                 this_run, args.run_id, "route", key="part_id"
             ).write.mode("append").parquet(args.metrics_dir)
 
-    rows = observed.get("rows_total", 0)
-    dt = time.time() - t0
+    _report(args.run_id, observed, time.time() - t0)
+    return 0
+
+
+def _report(run_id: str, observed: dict, dt: float) -> None:
+    rows = observed["rows_total"]
     print(
-        f"run_id={args.run_id} rows={rows} secs={dt:.1f} "
+        f"run_id={run_id} rows={rows} secs={dt:.1f} "
         f"throughput={rows / dt if dt else 0:.0f} rows/s counters={observed}"
     )
-    return 0
 
 
 if __name__ == "__main__":

@@ -25,8 +25,7 @@ def route_observation() -> Observation:
 
 def observed_columns():
     return [F.count(F.lit(1)).alias("rows_total")] + [
-        F.sum(F.when(F.col("route") == r, 1).otherwise(0)).alias(f"route_{r}")
-        for r in ROUTES
+        F.count_if(F.col("route") == r).alias(f"route_{r}") for r in ROUTES
     ]
 
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from logspark import gen_sql, parse, route, tokens
+from logspark import gen_sql, metrics, parse, route, tokens
 
 
 def build_corpus_df(
@@ -79,14 +79,7 @@ def routed_hits(
         ),
     ).withColumn("sink", route.sink_expr(F.col("route")))
     if observation is not None:
-        df = df.observe(
-            observation,
-            F.count(F.lit(1)).alias("rows_total"),
-            *[
-                F.sum(F.when(F.col("route") == r, 1).otherwise(0)).alias(f"route_{r}")
-                for r in route.ROUTES
-            ],
-        )
+        df = df.observe(observation, *metrics.observed_columns())
     return df
 
 

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logspark.session import local_table
+
 # bot user-agent markers (Matomo-import-logs-style exclusion class
 # `requests_done_by_bots`, counters at /root/reference/libs/lib_summary.py:14)
 BOT_MARKERS = ["bot", "crawler", "spider", "slurp", "archiver", "httpclient"]
@@ -51,7 +53,7 @@ def ext_lookup_df(spark: SparkSession) -> DataFrame:
         (e, "download") for e in DOWNLOAD_EXTS if e not in ("gz",)
     ]
     rows.append(("gz", "download"))
-    return spark.createDataFrame(rows, "ext string, ext_kind string")
+    return local_table(spark, rows, "ext string, ext_kind string")
 
 
 def stem_expr(path: Column) -> Column:

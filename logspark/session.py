@@ -10,11 +10,39 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def default_driver_memory() -> str:
+    """A quarter of the host's MemTotal, clamped to [1, 4] GiB, so the JVM
+    fits beside other tenants; $LOGSPARK_DRIVER_MEM overrides it."""
+    override = os.environ.get("LOGSPARK_DRIVER_MEM")
+    if override:
+        return override
+    with open("/proc/meminfo") as f:
+        mem_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{max(1024, min(4096, mem_kb // 1024 // 4)) // 256 * 256}m"
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small table built from a Python list, planned as a LocalRelation.
+
+    ``createDataFrame(list)`` plans a LogicalRDD, and broadcasting one
+    starts a Spark job on every query; an Arrow table yields a
+    LocalRelation (empty ones included) that the driver broadcasts without
+    one."""
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table)
 
 
 def get_spark(
@@ -39,6 +67,14 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # AQE replaces a shuffle stage that wrote no rows with an empty
+        # relation, and an Observation attached inside that stage then never
+        # reports (job.main's counters over a run whose pending part ids hold
+        # no rows); without the rule the empty stage runs and reports zeros
+        .config(
+            "spark.sql.adaptive.optimizer.excludedRules",
+            "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bigger Arrow batches across the Python boundary: fewer per-batch
         # round trips for mapInArrow/pandas UDFs (tokens are ~100B/row, so
@@ -55,7 +91,11 @@ def get_spark(
         # it: joins are broadcast with explicit keys, null filters explicit.
         .config("spark.sql.constraintPropagation.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("LOGSPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", default_driver_memory())
+        # orderBy().limit(k) plans TakeOrderedAndProject, whose top-k
+        # selector allocates 2k slots up front; above this k it sorts
+        # instead (k=10**9 otherwise kills the driver with an OOM)
+        .config("spark.sql.execution.topKSortFallbackThreshold", "100000")
         # Parallel (throughput) GC beats the G1 default for this batch
         # workload: G1's concurrent mark/refine threads contend with the 32
         # executor threads on the hot string-heavy pipeline. Measured on the

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logspark.session import local_table
+
 S_QUEUE, S_PARTIAL, S_LOADED, S_COMPLETED = 0, 1, 2, 5
 
 # (source, regime_start | None, expected): later regime rows win when
@@ -34,11 +36,10 @@ DEFAULT_QUOTAS = [
 
 
 def quota_df(spark: SparkSession, quotas=None) -> DataFrame:
-    rows = [
-        (s, r, e) for s, r, e in (quotas or DEFAULT_QUOTAS)
-    ]
-    return spark.createDataFrame(
-        rows, "source STRING, regime_start STRING, expected INT"
+    return local_table(
+        spark,
+        quotas or DEFAULT_QUOTAS,
+        "source STRING, regime_start STRING, expected INT",
     ).withColumn("regime_start", F.col("regime_start").cast("date"))
 
 

@@ -2,7 +2,7 @@
 
 The reference's whole identity is its control tables (/root/reference/
 models/declarative.py:9-63); our production analog is Iceberg MERGE INTO /
-overwritePartitions (job.py --iceberg ships the catalog configs) with the
+overwritePartitions (the fixture below sets the catalog configs) with the
 parquet dynamic-partition-overwrite fallback reproducing the commit
 semantics (tested by the kill/replay scenarios in
 test_sinks_job_streaming.py). This module is the catalog-path counterpart:

@@ -909,3 +909,16 @@ def test_novelty_curve_min_agg_not_window(spark, docs40):
     assert "Window" not in txt
     assert "rangepartitioning" not in txt.lower()
     assert "CartesianProduct" not in txt
+
+
+def test_lookup_tables_are_local_relations(spark, corpus_parquet):
+    """The list-built lookup tables (extension kinds, quotas) are planned
+    as LocalRelations, which the driver broadcasts without a Spark job —
+    never as RDD scans, which run one job per broadcast per query."""
+    from logspark import pipeline, status
+
+    routed = pipeline.routed_hits(spark, spark.read.parquet(corpus_parquet))
+    for df in (routed, status.rollup_date_status(routed, spark)):
+        txt = plan_text(df)
+        assert "Scan ExistingRDD" not in txt, txt
+        assert "LocalTableScan" in txt, txt

@@ -3,6 +3,14 @@ multimodal plumbing, streaming/batch parity."""
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+import shutil
+import subprocess
+import sys
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -108,6 +116,156 @@ def test_job_kill_between_data_and_control_no_duplicates(
     assert back.count() == 1000
     assert back.select("doc_id").distinct().count() == 1000
     assert store.committed_ids().count() == 8
+
+
+def _job_argv(corpus, out, ckpt, run_id):
+    return [
+        "--input", corpus, "--output", out, "--checkpoint", ckpt,
+        "--partitions", "8", "--run-id", run_id, "--cores", "8",
+    ]
+
+
+def _commit(spark, ckpt, part_ids):
+    spark.createDataFrame(
+        [(p, control.LOADED, 1, 1, "earlier") for p in part_ids],
+        control.CONTROL_SCHEMA,
+    ).write.mode("append").parquet(ckpt)
+
+
+def _sink_counts(spark, out):
+    return Counter(
+        {
+            (r["route"], r["sink"]): r["count"]
+            for r in spark.read.parquet(out).groupBy("route", "sink").count().collect()
+        }
+    )
+
+
+def _part_files(out, part_ids):
+    return sorted(
+        f
+        for p in part_ids
+        for f in glob.glob(os.path.join(out, "sink=*", f"part_id={p}", "*"))
+    )
+
+
+def test_job_resume_replays_only_uncommitted_part_ids(spark, tmp_path, capsys):
+    """A store holding LOADED rows for part ids 0-5 of 8: the resume reads,
+    writes and commits only 6 and 7, leaves the committed parts' files
+    alone, and the sinks end up with a fresh run's per-(route, sink)
+    counts."""
+    from logspark import job
+
+    corpus = str(tmp_path / "corpus")
+    synth.write_corpus(spark, 1000, corpus)
+    fresh_out = str(tmp_path / "fresh_out")
+    assert job.main(_job_argv(corpus, fresh_out, str(tmp_path / "fresh_ck"), "fresh")) == 0
+    fresh = _sink_counts(spark, fresh_out)
+    want_rows = spark.read.parquet(fresh_out).filter(F.col("part_id") >= 6).count()
+
+    # the sinks as a crash after committing parts 0-5 left them
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    shutil.copytree(fresh_out, out)
+    for d in glob.glob(os.path.join(out, "sink=*", "part_id=[67]")):
+        shutil.rmtree(d)
+    _commit(spark, ckpt, range(6))
+    kept = _part_files(out, range(6))
+    capsys.readouterr()
+
+    assert job.main(_job_argv(corpus, out, ckpt, "resume")) == 0
+    assert f" rows={want_rows} " in capsys.readouterr().out
+    ctl = spark.read.parquet(ckpt).collect()
+    assert sorted(r["part_id"] for r in ctl if r["run_id"] == "resume") == [6, 7]
+    assert _part_files(out, range(6)) == kept
+    assert _sink_counts(spark, out) == fresh
+
+
+def test_job_fully_committed_store_never_reads_corpus(spark, tmp_path, capsys):
+    """Every part id LOADED: the pending set is empty from control metadata
+    alone, so the job returns 0 without the corpus (deleted here), writes
+    nothing and commits nothing."""
+    from logspark import job
+
+    corpus = str(tmp_path / "corpus")
+    synth.write_corpus(spark, 200, corpus)
+    shutil.rmtree(corpus)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _commit(spark, ckpt, range(8))
+
+    assert job.main(_job_argv(corpus, out, ckpt, "noop")) == 0
+    assert " rows=0 " in capsys.readouterr().out
+    assert not os.path.exists(out)
+    assert spark.read.parquet(ckpt).count() == 8
+
+
+def test_job_with_no_pending_rows_commits_nothing(spark, tmp_path, capsys):
+    """Pending part ids that hold no corpus rows (an empty corpus, or a
+    corpus with fewer documents than --partitions) make a run that writes
+    nothing: it reports zero counters and commits no control rows."""
+    from logspark import job
+
+    tiny, empty = str(tmp_path / "tiny"), str(tmp_path / "empty")
+    synth.write_corpus(spark, 3, tiny)
+    spark.read.parquet(tiny).limit(0).write.parquet(empty)
+    out = str(tmp_path / "out")
+
+    assert job.main(_job_argv(empty, out, str(tmp_path / "ck_empty"), "e")) == 0
+    assert " rows=0 " in capsys.readouterr().out
+    assert not os.path.exists(str(tmp_path / "ck_empty"))
+
+    ckpt = str(tmp_path / "ckpt")
+    assert job.main(_job_argv(tiny, out, ckpt, "t1")) == 0
+    committed = spark.read.parquet(ckpt).count()
+    assert 1 <= committed <= 3
+    capsys.readouterr()
+    assert job.main(_job_argv(tiny, out, ckpt, "t2")) == 0
+    assert " rows=0 " in capsys.readouterr().out
+    assert spark.read.parquet(ckpt).count() == committed
+    assert spark.read.parquet(out).count() == 3
+
+
+def test_job_raises_on_unreadable_control_store(spark, tmp_path):
+    """A control store that cannot be read is an error, never an empty
+    store: the job must not replay every partition over it."""
+    from logspark import job
+
+    corpus = str(tmp_path / "corpus")
+    synth.write_corpus(spark, 200, corpus)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    os.makedirs(ckpt)
+    with open(os.path.join(ckpt, "part-00000.parquet"), "wb") as f:
+        f.write(b"this is not a parquet file")
+
+    with pytest.raises(Exception):
+        job.main(_job_argv(corpus, out, ckpt, "corrupt"))
+    assert not os.path.exists(out)
+
+
+def test_job_first_run_prints_no_java_stack_trace(spark, tmp_path, capfd):
+    """A missing control store is the expected first-run state and must
+    print no Java stack trace. The job runs in a child process whose
+    stderr (the JVM's log output) goes through capfd; two first runs share
+    its JVM, since a query observed earlier in a session is what makes a
+    later failing query log its trace."""
+    corpus = str(tmp_path / "corpus")
+    synth.write_corpus(spark, 200, corpus)
+    runs = [
+        _job_argv(corpus, str(tmp_path / f"out{i}"), str(tmp_path / f"ck{i}"), f"r{i}")
+        for i in range(2)
+    ]
+    code = (
+        "import sys\n"
+        "from logspark import job\n"
+        f"sys.exit(max(job.main(a) for a in {runs!r}))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, LOGSPARK_DRIVER_MEM="1g")
+    capfd.readouterr()
+    rc = subprocess.run([sys.executable, "-c", code], env=env, timeout=600).returncode
+    err = capfd.readouterr().err
+    assert rc == 0, err[-2000:]
+    assert "PATH_NOT_FOUND" not in err, err[-4000:]
+    assert not re.search(r"^\s+at [\w$.]+\(", err, re.M), err[-4000:]
 
 
 def test_multimodal_stub_and_stats(spark, tmp_path):
