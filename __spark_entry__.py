@@ -1488,7 +1488,7 @@ def q_grok_ncsa_counts(spark, sf_dir):
     fields, so a wrong pattern cannot agree with itself."""
     from logspark import grok
 
-    lines = pipeline.detokenized(_corpus(spark, sf_dir), keep_tokens=False)
+    lines = pipeline.detokenized(_corpus(spark, sf_dir))
     g = grok.grok_extract(lines, grok.NCSA_COMBINED_TEMPLATE)
     return (
         g.filter(F.col("status") != "")
@@ -1508,7 +1508,7 @@ def q_grok_w3c_counts(spark, sf_dir):
     the regex-FREE ground truth again."""
     from logspark import grok
 
-    lines = pipeline.detokenized(_corpus(spark, sf_dir), keep_tokens=False)
+    lines = pipeline.detokenized(_corpus(spark, sf_dir))
     g = grok.grok_extract(lines, grok.W3C_EXTENDED_TEMPLATE)
     return (
         g.filter(F.col("status") != "")
@@ -1530,7 +1530,7 @@ def _grok_counts(spark, sf_dir, template) -> DataFrame:
     under-matches cannot agree with it."""
     from logspark import grok
 
-    lines = pipeline.detokenized(_corpus(spark, sf_dir), keep_tokens=False)
+    lines = pipeline.detokenized(_corpus(spark, sf_dir))
     g = grok.grok_extract(lines, template)
     return (
         g.filter(F.col("status") != "")
@@ -1579,7 +1579,7 @@ def q_grok_nginx_json_counts(spark, sf_dir):
     contract as the grok templates; same regex-free ground-truth oracle."""
     from logspark import grok
 
-    lines = pipeline.detokenized(_corpus(spark, sf_dir), keep_tokens=False)
+    lines = pipeline.detokenized(_corpus(spark, sf_dir))
     g = grok.nginx_json_extract(lines)
     return (
         g.filter(F.col("status").isNotNull())

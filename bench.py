@@ -536,17 +536,25 @@ def main() -> None:
     # ---- headline queries + fan-out write in a fresh session ----
     spark = _new_spark(CPUS)
 
-    # true end-to-end including the salted per-sink fan-out write (token
-    # arrays preserved into the sinks per the per-row invariant)
+    # true end-to-end including the per-sink fan-out write (token arrays
+    # preserved into the sinks per the per-row invariant), laid out as the
+    # job writes it: (sink, part_id) directories, each written by one task.
+    # 4*CPUS part ids: with only CPUS of them, hash collisions in the
+    # shuffle left cores idle (4 ids -> 3 write tasks at 4 cores, 1M rows:
+    # 16.7-18.9 s against 14.1-15.5 s with 16 ids).
     import shutil
     import tempfile
 
+    from logspark import control as _control
     from logspark import pipeline as _pipe
     from logspark import sinks as _sinks
 
     fan_dir = tempfile.mkdtemp(prefix="logspark_bench_fanout_")
     try:
-        routed = _pipe.routed_hits(spark, spark.read.parquet(corpus_path))
+        routed = _pipe.routed_hits(
+            spark,
+            _control.with_partition_id(spark.read.parquet(corpus_path), 4 * CPUS),
+        )
         # Untimed warm pass (same discipline as _pipeline_run's warms): the
         # fanout is the FIRST job in this fresh session since the scaling
         # levels moved to their own cpuset subprocesses, and a cold JVM pays
@@ -555,35 +563,18 @@ def main() -> None:
         # sink width through a noop sink (no disk, no shuffle), compiling
         # the same generated code and heating the corpus file cache.
         routed.select(
-            *[c for c in _sinks.SINK_COLUMNS if c in routed.columns], "sink"
+            *[c for c in _sinks.SINK_COLUMNS if c in routed.columns],
+            "sink",
+            "part_id",
         ).write.format("noop").mode("overwrite").save()
         t0 = time.time()
-        # salted distribution: measured 4x faster than 'direct' at 8M rows
-        # (64.8s vs 264.4s at 32 cores — per-task multi-sink writer state
-        # dominates once rows/task grow; see sinks.write_fanout docstring)
-        _sinks.write_fanout(
-            routed, fan_dir, write_buckets=CPUS, distribution="salted"
-        )
+        _sinks.write_fanout(routed, fan_dir, partition_cols=["sink", "part_id"])
         t_fan = time.time() - t0
-        # clean readings are 113-218k rows/s; a sub-150k reading means the
-        # window was likely co-tenant-throttled (r4: 80.7k recorded vs
-        # 113-218k clean) — one best-of-two retry bounds the artifact at
-        # the cost of a single extra write, and a still-low best-of-two is
-        # recorded as a throttle annotation rather than silently shipped
-        if rows / t_fan < 150_000:
-            shutil.rmtree(fan_dir, ignore_errors=True)
-            t0 = time.time()
-            _sinks.write_fanout(
-                routed, fan_dir, write_buckets=CPUS, distribution="salted"
-            )
-            t_fan = min(t_fan, time.time() - t0)
         result["fanout_write"] = {
             "rows": rows,
             "sec": round(t_fan, 3),
             "rows_per_sec": round(rows / t_fan) if t_fan else None,
         }
-        if rows / t_fan < 150_000:
-            result["fanout_write"]["throttled_window"] = True
         total += t_fan
     finally:
         shutil.rmtree(fan_dir, ignore_errors=True)

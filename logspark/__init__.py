@@ -10,9 +10,9 @@ over an Iceberg/parquet table of pre-tokenized sequences
 (doc_id:string, tokens:array<int32>, n_tok:int32, source:string).
 
 Design goals (BASELINE.json north_rule):
-  * vectorized parsing: Spark SQL regexp/json expressions + Arrow pandas UDFs,
-    never per-row Python;
-  * explicit partitioning on doc_id, salting for skewed sources, AQE skew-join;
+  * vectorized parsing: Spark SQL regexp/json expressions, never per-row
+    Python;
+  * explicit hash partitioning on doc_id, AQE skew-join;
   * per-partition lineage + accumulator/observe metrics on every stage;
   * resumable from checkpoint state (anti-join vs committed partitions);
   * >=0.8 throughput scaling efficiency from N to 4N cores.

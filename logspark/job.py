@@ -16,11 +16,9 @@ Stages (mirrors the reference control loop, SURVEY.md §3 E1/E2/E3):
      filter
   3. detokenize -> detect -> parse -> enrich -> route (one narrow pass,
      observe() counters riding along)
-  4. fan-out write, physically partitioned by (sink, part_id),
-     'partitioned' distribution by default (one part_id shuffle so each
-     directory is written by exactly one task — Iceberg
-     write.distribution-mode=hash analog; see sinks.write_fanout for the
-     direct/salted alternatives and their measured trade-offs)
+  4. fan-out write, physically partitioned by (sink, part_id), after one
+     part_id shuffle so each directory is written by exactly one task
+     (Iceberg write.distribution-mode=hash analog; sinks.write_fanout)
   5. commit per-partition control rows read back from the written sinks
      (+ lineage rows with --metrics-dir)
 
@@ -69,14 +67,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     p.add_argument("--partitions", type=int, default=256)
     p.add_argument("--run-id", default="run-0")
-    p.add_argument(
-        "--distribution",
-        choices=["direct", "salted", "partitioned"],
-        default="partitioned",
-        help="fan-out write distribution (see sinks.write_fanout); "
-        "'partitioned' co-locates each part_id in one task so the "
-        "(sink, part_id) layout writes ~1 file per directory",
-    )
     p.add_argument("--cores", type=int, default=None)
     p.add_argument(
         "--anonymize-ip",
@@ -135,13 +125,7 @@ def main(argv: list[str] | None = None) -> int:
             .withColumn("n_tok", F.size("tokens"))
             .withColumn("ip", masked)
         )
-    sinks.write_fanout(
-        routed,
-        args.output,
-        mode="overwrite",
-        distribution=args.distribution,
-        partition_cols=["sink", "part_id"],
-    )
+    sinks.write_fanout(routed, args.output, partition_cols=["sink", "part_id"])
 
     observed = obs.get
     if not metrics.conservation_ok(observed):

@@ -1,5 +1,5 @@
 """End-to-end pipeline wiring: corpus -> detokenize -> parse -> enrich ->
-route -> aggregate, with observe()-based counters and per-partition lineage.
+route -> aggregate, with observe()-based counters.
 
 This is the Spark-native re-expression of the reference's whole control loop
 (SURVEY.md §3, E1/E2): what the reference reconstructed by parsing importer
@@ -27,42 +27,27 @@ def build_corpus_df(
     return df
 
 
-def detokenized(df: DataFrame, mode: str = "jvm", keep_tokens: bool = True) -> DataFrame:
-    """Attach the reconstructed ``line`` column.
-
-    Default is the pure-JVM expression codec: measured on the 4M-row corpus
-    (32-core box, this sandbox), the whole-pipeline throughput is higher AND
-    scales 0.84-0.87 efficiency from 8->32 cores, while the Arrow/Python
-    boundary path saturates at ~8 cores (jstack shows Unsafe.copyMemory /
-    ArrowWriter — the row<->Arrow copy chain is memory-bandwidth-bound).
-    'arrow' remains the right choice for true BPE vocabularies where
-    detokenization needs a Python-side lookup table.
-    """
+def detokenized(df: DataFrame) -> DataFrame:
+    """Attach the reconstructed ``line`` column with the pure-JVM expression
+    codec (``tokens.detokenize_expr``): it stays in whole-stage codegen and
+    never crosses the Python boundary."""
     if "line" in df.columns:
         return df
-    if mode == "pandas":
-        return df.withColumn("line", tokens.detokenize_pandas(F.col("tokens")))
-    if mode == "jvm":
-        return df.withColumn("line", tokens.detokenize_expr("tokens"))
-    return tokens.detokenize_map_in_arrow(df, keep_tokens=keep_tokens)
+    return df.withColumn("line", tokens.detokenize_expr("tokens"))
 
 
 def routed_hits(
     spark: SparkSession,
     corpus: DataFrame,
-    detokenize_mode: str = "jvm",
     observation: Observation | None = None,
-    keep_tokens: bool = True,
 ) -> DataFrame:
     """corpus(doc_id, source, tokens, n_tok) -> routed hit rows.
 
     Narrow pipeline: zero shuffles until the caller aggregates or writes.
     ``observation`` (if given) collects per-route counters in the SAME pass —
     the engine-native accumulator metrics required by north_rule.
-    ``keep_tokens=False`` omits the token arrays from the routed output
-    (aggregate-only consumers; halves the Arrow->JVM transfer).
     """
-    df = detokenized(corpus, detokenize_mode, keep_tokens=keep_tokens)
+    df = detokenized(corpus)
     df = parse.parse_lines(df, "line")
     df = parse.enriched_ext_kind(df, spark)
     df = df.withColumn(
@@ -83,21 +68,9 @@ def routed_hits(
     return df
 
 
-def partition_lineage(routed: DataFrame) -> DataFrame:
-    """Per-partition lineage counts (north_rule): which physical partition
-    produced how many rows of each route."""
-    return (
-        routed.groupBy(F.spark_partition_id().alias("partition_id"), "route")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy("partition_id", "route")
-    )
-
-
-def run_counts(
-    spark: SparkSession, corpus: DataFrame, detokenize_mode: str = "jvm"
-) -> DataFrame:
+def run_counts(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     """The flagship aggregate: per-(source, route, sink) counts."""
-    r = routed_hits(spark, corpus, detokenize_mode, keep_tokens=False)
+    r = routed_hits(spark, corpus)
     return (
         r.groupBy("source", "route", "sink")
         .agg(F.count("*").alias("cnt"))

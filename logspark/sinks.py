@@ -7,11 +7,12 @@ table writes (BASELINE.json north_star sinks).
 Scale design:
   * ONE pass over the routed rows — ``partitionBy('sink')`` fan-out, never
     five filtered re-scans.
-  * Write skew: ``visits`` is ~50% of rows (hot partition). We salt the
-    physical write distribution with a bucket column derived from doc_id
-    (pmod(xxhash64, k)) and repartition on (sink, bucket) so k tasks share
-    each hot sink instead of one straggler (explicit skew handling per
-    north_rule; AQE coalesces the small sinks' buckets).
+  * One write distribution. With a partition column besides ``sink`` (the
+    job's ``part_id``), rows are repartitioned on it, so each directory is
+    written by one task; part_id is a hash of doc_id, so that shuffle has
+    no skew even though ``visits`` holds about half the rows. With
+    ``sink`` alone there is no shuffle, and each task writes into every
+    sink it touches.
   * Idempotent re-runs: dynamic partition overwrite — re-processing a
     partition replaces exactly its own files (parquet fallback for Iceberg's
     atomic overwritePartitions). The production job layers ``part_id`` into
@@ -46,71 +47,42 @@ SINK_COLUMNS = [
 def write_fanout(
     routed: DataFrame,
     out_dir: str,
-    write_buckets: int = 8,
     mode: str = "overwrite",
-    distribution: str = "direct",
-    max_records_per_file: int = 1_000_000,
+    distribution: str = "partitioned",
     partition_cols: list[str] | None = None,
 ) -> None:
-    """Fan-out write with an explicit distribution strategy.
+    """Fan-out write, physically partitioned by ``partition_cols`` (default
+    ['sink']).
 
-    distribution='direct' (default): NO pre-write shuffle — each task
-    writes its own rows into every sink partition it touches. Measured 3-4x
-    faster than the shuffled path on the 4M-row corpus (15.7s vs 69.5s at
-    32 cores: the full-row shuffle dominated) — but the relation INVERTS
-    as rows/task grow: at 8M rows 'direct' measured 264s vs 'salted' 65s
-    (each task keeps up to n_sinks parquet writers open, and the per-task
-    multi-writer state/flush churn dominates once tasks write many row
-    groups per sink). Use 'direct' for small batches on many tasks;
-    'salted'/'partitioned' for bulk loads. Files per run are bounded by
-    tasks x sinks and by max_records_per_file; at extreme task counts the
-    small files on cold sinks are the table service's job (Iceberg
-    rewrite_data_files compaction), which is how 10^12-row tables are
-    operated anyway.
+    When ``partition_cols`` holds columns other than ``sink``, rows are
+    repartitioned on those columns, so each directory is written by exactly
+    ONE task and gets one file per 1,000,000 rows (Iceberg
+    write.distribution-mode=hash analog); a column that is constant within
+    ``routed`` therefore gets one writer task. With ``sink`` alone there is
+    no shuffle: each input task writes into every sink directory it
+    touches. ``distribution`` names this one distribution and accepts
+    nothing else.
 
-    distribution='salted': repartition on (sink, salt-bucket) first —
-    bounds file count to write_buckets per sink while still splitting the
-    hot sink across write_buckets tasks (explicit skew handling, north_rule).
-    Right when the runtime must bound file counts itself (no compaction
-    service) or tasks >> buckets.
-
-    distribution='partitioned' (requires a secondary partition column,
-    e.g. part_id): repartition on it so each physical directory is written
-    by exactly ONE task — total files ~= number of directories instead of
-    tasks x directories. Measured on the 20M-row job with the
-    (sink, part_id) layout: 'direct' produced 40,960 files at 48k rows/s;
-    'partitioned' is the default there (part sizes are uniform by
-    construction — hash of doc_id — so the shuffle has no skew).
-
-    partition_cols (default ['sink']): physical layout. The production job
-    passes ['sink', 'part_id'] so that mode='overwrite' + dynamic partition
-    overwrite replaces exactly the (sink, part_id) directories this run
-    touches — the crash-replay idempotence unit (job.py commit protocol).
+    The production job passes ['sink', 'part_id'] so that mode='overwrite'
+    + dynamic partition overwrite replaces exactly the (sink, part_id)
+    directories this run touches — the crash-replay idempotence unit
+    (job.py commit protocol).
     """
+    if distribution != "partitioned":
+        raise ValueError(f"unknown distribution {distribution!r}; only 'partitioned'")
     pcols = partition_cols or ["sink"]
     cols = [c for c in SINK_COLUMNS if c in routed.columns] + [
         c for c in pcols if c not in SINK_COLUMNS
     ]
     df = routed.select(*dict.fromkeys(cols + pcols))
-    if distribution == "salted":
-        # salt column only exists on the salted path — in other modes it
-        # would be dead weight in every output file
-        df = df.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("doc_id"), F.lit(write_buckets)).cast("int"),
-        ).repartition("sink", "bucket")
-    elif distribution == "partitioned":
-        extra = [c for c in pcols if c != "sink"]
-        if not extra:
-            raise ValueError(
-                "distribution='partitioned' needs a non-sink partition column"
-            )
+    extra = [c for c in pcols if c != "sink"]
+    if extra:
         df = df.repartition(*extra)
     (
         df.write.partitionBy(*pcols)
         .mode(mode)
         .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", 1_000_000)
         # zstd for token-array sinks: parquet's per-value encode of nested
         # int lists is the write bottleneck, and snappy-on-dictionary pages
         # is pathological for them — measured on the 8M-row corpus (1B list

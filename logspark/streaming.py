@@ -91,9 +91,8 @@ def read_corpus_stream(
 
 
 def routed_stream(spark: SparkSession, stream: DataFrame) -> DataFrame:
-    """Same parse/route expressions as batch (JVM detokenizer — Arrow
-    mapInArrow is batch-only ergonomics; expressions are shared)."""
-    return pipeline.routed_hits(spark, stream, detokenize_mode="jvm")
+    """Same detokenize/parse/route expressions as batch."""
+    return pipeline.routed_hits(spark, stream)
 
 
 def windowed_route_counts(routed: DataFrame, window: str = "1 hour") -> DataFrame:
@@ -541,22 +540,21 @@ def start_fanout_stream(
 
     foreachBatch is at-least-once: after a mid-batch kill the restarted
     stream REPLAYS the uncommitted epoch. Appending would duplicate those
-    rows; instead each batch writes into (sink, epoch) partitions with
-    dynamic partition overwrite, so a replay REPLACES its own epoch's files
-    — the same commit protocol as job.py, keyed by epoch instead of
-    part_id. (Production Iceberg: overwritePartitions per epoch.)"""
+    rows; instead each batch writes its sinks under its own ``epoch=N``
+    directory with dynamic partition overwrite, so a replay REPLACES its own
+    epoch's files — the same commit protocol as job.py, keyed by epoch
+    instead of part_id. (Production Iceberg: overwritePartitions per
+    epoch.) The epoch is a directory, not a partition column of the write:
+    as a column it would be constant within the batch, and
+    ``sinks.write_fanout`` would shuffle the whole batch onto one writer
+    task."""
     from logspark import sinks
 
     stream = read_corpus_stream(spark, corpus_path)
     routed = routed_stream(spark, stream)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        sinks.write_fanout(
-            batch_df.withColumn("epoch", F.lit(int(epoch_id))),
-            out_dir,
-            mode="overwrite",
-            partition_cols=["sink", "epoch"],
-        )
+        sinks.write_fanout(batch_df, f"{out_dir}/epoch={int(epoch_id)}")
 
     return (
         routed.writeStream.foreachBatch(write_batch)

@@ -6,21 +6,11 @@ character's code point, ASCII/latin-1 range) so detokenization is exact and
 the per-row invariant — token-array equality through every stage — is
 trivially checkable (``size(tokens) == n_tok`` plus full array equality).
 
-Three detokenizers (measured on the 4M-row corpus, 32-core sandbox):
-
-  * ``detokenize_expr`` — pure Spark SQL (transform + char + array_join).
-    **Default hot path**: stays inside whole-stage codegen, no Python
-    boundary, and scales 0.84-0.87 efficiency from 8->32 cores (3.5s
-    detok-only at 32 cores). Wins on absolute throughput at >=16 cores.
-  * ``detokenize_arrow`` — ``mapInArrow`` zero-copy-ish reconstruction: the
-    list<int32> values buffer, cast to uint8, IS the utf8 data buffer of the
-    output StringArray; offsets carry over. Cheapest CPU-wise at low core
-    counts, but the JVM row<->Arrow copy chain (ArrowWriter element writes,
-    Unsafe.copyMemory in jstack) is memory-bandwidth-bound and flatlines at
-    ~8 cores (6.3s at 8 AND 32 cores). Use when a Python-side vocabulary
-    table is genuinely needed.
-  * ``detokenize_pandas`` — Arrow-batched pandas UDF (template for real BPE
-    vocabularies that need a Python-side lookup table).
+One detokenizer runs in the pipeline: ``detokenize_expr``, a pure Spark
+SQL expression (transform + char + array_join). It stays inside whole-stage
+codegen and never crosses the Python boundary. ``detokenize_map_in_arrow``
+is its reference implementation in Arrow: the property and parity tests
+check the JVM codec against it.
 
 ``tokens`` is never mutated: all codecs derive NEW columns.
 """
@@ -29,7 +19,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -101,53 +90,23 @@ def _detok_list_array(arr: pa.Array) -> pa.Array:
 
 
 def detokenize_map_in_arrow(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    out: str = "line",
-    keep_tokens: bool = True,
+    df: DataFrame, tokens_col: str = "tokens", out: str = "line"
 ) -> DataFrame:
     """Zero-copy Arrow detokenization via mapInArrow (all columns pass
-    through; a new ``out`` string column is appended).
-
-    keep_tokens=False drops the token-array column from the OUTPUT batches
-    (the input side still reads it, of course). The array is the widest
-    column by far (~4 bytes/char vs 1 for the line), so aggregate-only
-    consumers that don't need the per-row invariant downstream save the
-    whole Arrow->JVM transfer of it. ``tokens`` itself is never mutated.
-    """
+    through; a new ``out`` string column is appended). The reference the
+    tests hold ``detokenize_expr`` to."""
     import pyspark.sql.types as T
 
-    keep = [f for f in df.schema.fields if keep_tokens or f.name != tokens_col]
-    schema = T.StructType(keep + [T.StructField(out, T.StringType())])
+    schema = T.StructType(df.schema.fields + [T.StructField(out, T.StringType())])
     idx = df.columns.index(tokens_col)
-    keep_idx = [i for i, c in enumerate(df.columns) if keep_tokens or c != tokens_col]
-    names = [df.columns[i] for i in keep_idx] + [out]
+    names = df.columns + [out]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             line = _detok_list_array(b.column(idx))
-            yield pa.RecordBatch.from_arrays(
-                [b.column(i) for i in keep_idx] + [line], names=names
-            )
+            yield pa.RecordBatch.from_arrays(list(b.columns) + [line], names=names)
 
     return df.mapInArrow(fn, schema)
-
-
-def _detokenize_batch(tokens: pd.Series) -> pd.Series:
-    return tokens.map(lambda a: bytes(int(t) for t in a).decode("latin-1"))
-
-
-_PANDAS_UDF = None
-
-
-def detokenize_pandas(tokens_col):
-    """Arrow-batched pandas UDF detokenizer (BPE-vocabulary template)."""
-    global _PANDAS_UDF
-    if _PANDAS_UDF is None:
-        from pyspark.sql import types as T
-
-        _PANDAS_UDF = F.pandas_udf(_detokenize_batch, T.StringType())
-    return _PANDAS_UDF(tokens_col)
 
 
 # ---------------------------------------------------------------------------

@@ -268,6 +268,60 @@ def test_job_first_run_prints_no_java_stack_trace(spark, tmp_path, capfd):
     assert not re.search(r"^\s+at [\w$.]+\(", err, re.M), err[-4000:]
 
 
+def test_job_writes_one_file_per_directory(spark, tmp_path):
+    """The fan-out's one distribution shuffles on part_id, so each
+    (sink, part_id) directory is written by one task: one data file each."""
+    from logspark import job
+
+    corpus = str(tmp_path / "corpus")
+    synth.write_corpus(spark, 1000, corpus)
+    out = str(tmp_path / "out")
+    assert job.main(_job_argv(corpus, out, str(tmp_path / "ckpt"), "r1")) == 0
+    dirs = glob.glob(os.path.join(out, "sink=*", "part_id=*"))
+    assert dirs
+    assert {d: len(glob.glob(os.path.join(d, "*.parquet"))) for d in dirs} == {
+        d: 1 for d in dirs
+    }
+
+
+def test_write_fanout_rejects_other_distributions(spark, small_corpus, tmp_path):
+    """'partitioned' is the only write distribution; any other name is an
+    error, not a silent fallback."""
+    routed = pipeline.routed_hits(spark, small_corpus)
+    out = str(tmp_path / "fan")
+    with pytest.raises(ValueError):
+        sinks.write_fanout(routed, out, distribution="salted")
+    assert not os.path.exists(out)
+
+
+def test_job_metrics_dir_lineage_matches_control_and_counters(spark, tmp_path, capsys):
+    """--metrics-dir appends lineage rows that sum, per part_id, to that
+    part's control rows_in and, per route, to the printed counters."""
+    import ast
+
+    from logspark import job
+
+    corpus = str(tmp_path / "corpus")
+    synth.write_corpus(spark, 1000, corpus)
+    out, ckpt, mdir = (str(tmp_path / d) for d in ("out", "ckpt", "metrics"))
+    capsys.readouterr()
+    assert job.main(_job_argv(corpus, out, ckpt, "m1") + ["--metrics-dir", mdir]) == 0
+    counters = ast.literal_eval(capsys.readouterr().out.split("counters=", 1)[1].strip())
+
+    lineage = spark.read.parquet(mdir).filter(F.col("run_id") == "m1").collect()
+    assert {r["partition_key"] for r in lineage} == {"part_id"}
+    per_part, per_route = Counter(), Counter()
+    for r in lineage:
+        per_part[r["partition_id"]] += r["cnt"]
+        per_route[r["route"]] += r["cnt"]
+    rows_in = {r["part_id"]: r["rows_in"] for r in spark.read.parquet(ckpt).collect()}
+    assert dict(per_part) == rows_in
+    assert sum(rows_in.values()) == counters["rows_total"] == 1000
+    assert {f"route_{k}": v for k, v in per_route.items()} == {
+        k: v for k, v in counters.items() if k.startswith("route_") and v
+    }
+
+
 def test_multimodal_stub_and_stats(spark, tmp_path):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     media = multimodal.synth_media(docs)
@@ -426,36 +480,6 @@ def test_streaming_checkpoint_recovery_exactly_once(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == 1200
     assert back.select("doc_id").distinct().count() == 1200
-
-
-def test_fanout_salting_spreads_hot_sink(spark, small_corpus, tmp_path):
-    """north_rule skew handling: the hot sink's rows carry >=2 distinct salt
-    buckets so its write is shared by multiple tasks, and the physical
-    layout lands multiple files for the dominant sink."""
-    from logspark import pipeline, sinks
-
-    routed = pipeline.routed_hits(spark, small_corpus)
-    out = str(tmp_path / "fan")
-    # at this toy size AQE rightly coalesces everything into one partition;
-    # disable coalescing so the salted physical layout is observable
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    spark.conf.set(key, "false")
-    try:
-        sinks.write_fanout(routed, out, write_buckets=4, distribution="salted")
-    finally:
-        spark.conf.set(key, "true")
-    import glob
-
-    hot = max(
-        glob.glob(out + "/sink=*"),
-        key=lambda d: len(glob.glob(d + "/*.parquet")),
-    )
-    assert len(glob.glob(hot + "/*.parquet")) >= 2
-    back = spark.read.parquet(out)
-    buckets = (
-        back.groupBy("sink").agg(F.countDistinct("bucket").alias("nb")).collect()
-    )
-    assert max(r["nb"] for r in buckets) >= 2
 
 
 def test_stream_click_attribution_matches_batch(spark):

@@ -8,20 +8,13 @@ from logspark import pipeline, route, synth, tokens
 
 
 def test_detokenizer_parity(spark, small_corpus):
-    """All three detokenizers reconstruct identical lines."""
-    a = pipeline.detokenized(small_corpus, "arrow").select("doc_id", "line")
-    j = pipeline.detokenized(small_corpus, "jvm").select(
+    """The pipeline's JVM codec reconstructs the same lines as the Arrow
+    reference detokenizer."""
+    a = tokens.detokenize_map_in_arrow(small_corpus).select("doc_id", "line")
+    j = pipeline.detokenized(small_corpus).select(
         "doc_id", F.col("line").alias("line_j")
     )
-    p = pipeline.detokenized(small_corpus, "pandas").select(
-        "doc_id", F.col("line").alias("line_p")
-    )
-    bad = (
-        a.join(j, "doc_id")
-        .join(p, "doc_id")
-        .filter((F.col("line") != F.col("line_j")) | (F.col("line") != F.col("line_p")))
-        .count()
-    )
+    bad = a.join(j, "doc_id").filter(F.col("line") != F.col("line_j")).count()
     assert bad == 0
 
 
