@@ -222,11 +222,12 @@ _VISIT_SESSIONS_CACHE: dict = {}
 
 def _visit_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionized parsed hits (30-min visit model), memoized + lineage-
-    truncated per (session, sf_dir): SIX visit-report queries (log_visits,
+    truncated per (session, sf_dir): EIGHT visit-report queries (log_visits,
     visitor_frequency, visit_entry_exit, visit_duration_buckets,
-    visit_hours, pages_per_visit) consume the IDENTICAL sessionization —
-    one visitor-key shuffle + lag/running-sum window shared instead of
-    six (same discipline as _neardup_pairs)."""
+    visit_hours, pages_per_visit, campaign_attribution,
+    unique_visitors_daily) consume the IDENTICAL sessionization — one
+    visitor-key shuffle + lag/running-sum window shared instead of eight
+    (same discipline as _neardup_pairs)."""
     from logspark import visits
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -3402,10 +3403,10 @@ GROUP BY 1, 2, 3""".replace("{R}", R),
         # neither component)
         "unique_visitors_daily": f"""
 WITH h AS (SELECT ip,
-                  CASE WHEN fmt = 'ncsa_common' THEN ''
-                       WHEN fmt IN ('w3c_extended', 'iis', 'cloudfront')
-                         THEN replace(ua, '+', ' ')
-                       ELSE ua END AS ua_k,
+                  COALESCE(CASE WHEN fmt = 'ncsa_common' THEN ''
+                                WHEN fmt IN ('w3c_extended', 'iis', 'cloudfront')
+                                  THEN replace(ua, '+', ' ')
+                                ELSE ua END, '') AS ua_k,
                   ((CAST(dd AS INT) * 24 + CAST(hh AS INT)) * 60
                     + CAST(mi AS INT)) * 60 + CAST(ss AS INT) AS tsec
            FROM ({{R}}) r WHERE NOT corrupt)

@@ -42,8 +42,9 @@ CAMPAIGN_MEDIUM_PARAMS = ["pk_medium", "mtm_medium", "utm_medium"]
 
 def first_param_expr(params: list, query_col: str = "query") -> F.Column:
     """First non-empty value among ``params`` in the raw query string —
-    one anchored regex per name, coalesced in priority order (the same
-    shape as search_keyword_expr; all JVM-side in codegen)."""
+    one anchored regex per name, `(?:^|&)name=([^&]*)`, coalesced in
+    priority order; NULL when no param matches or the value is empty
+    (all JVM-side in codegen)."""
     vals = [
         F.nullif(
             F.regexp_extract(query_col, rf"(?:^|&){p}=([^&]*)", 1), F.lit("")
@@ -68,22 +69,6 @@ def outlink_domains(routed: DataFrame) -> DataFrame:
     )
 
 
-def search_keyword_expr(query_col: str = "query") -> F.Column:
-    """First matching search param's value from the raw query string.
-
-    One anchored regex per param name — `(?:^|&)name=([^&]*)` — coalesced
-    in Matomo's parameter-priority order; NULL when no param matches or
-    the value is empty.
-    """
-    kws = [
-        F.nullif(
-            F.regexp_extract(query_col, rf"(?:^|&){p}=([^&]*)", 1), F.lit("")
-        )
-        for p in SEARCH_PARAMS
-    ]
-    return F.coalesce(*kws)
-
-
 def site_search_keywords(routed: DataFrame) -> DataFrame:
     """(keyword, n_searches, n_searchers) — Matomo Site Search report.
 
@@ -92,7 +77,7 @@ def site_search_keywords(routed: DataFrame) -> DataFrame:
     visitor key, see visits.py).
     """
     s = routed.filter(F.col("parsed_ok")).withColumn(
-        "keyword", search_keyword_expr()
+        "keyword", first_param_expr(SEARCH_PARAMS)
     )
     return (
         s.filter(F.col("keyword").isNotNull())

@@ -64,15 +64,6 @@ PROBE_IIS = r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2} W3SVC"
 PROBE_W3C = r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2} \d+\.\d+\.\d+\.\d+ "
 PROBE_NCSA = r'^\d+\.\d+\.\d+\.\d+ \S+ \S+ \[[^\]]+\] "'
 
-FORMATS = [
-    "nginx_json",
-    "cloudfront",
-    "iis",
-    "w3c_extended",
-    "ncsa_combined",
-    "ncsa_common",
-]
-
 
 def detect_format(line: Column) -> Column:
     """Format auto-detection dispatch (analog of the reference's dispatch

@@ -43,8 +43,6 @@ ROUTE_TO_SINK = {
     "visit": "visits",
 }
 
-SINKS = ["visits", "downloads", "outlinks", "errors", "ignored"]
-
 
 def route_expr(
     parsed_ok: Column,
@@ -92,7 +90,3 @@ def route_counts(routed: DataFrame) -> DataFrame:
     """Per-route aggregate counts (the engine-native replacement for parsing
     importer stdout — SURVEY.md §0.1). Map-side partial agg; 9 groups."""
     return routed.groupBy("route").agg(F.count("*").alias("cnt"))
-
-
-def sink_counts(routed: DataFrame) -> DataFrame:
-    return routed.groupBy("sink").agg(F.count("*").alias("cnt"))

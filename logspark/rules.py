@@ -31,9 +31,6 @@ DOWNLOAD_EXTS = ["pdf", "zip", "tar.gz", "exe", "dmg", "apk", "gz", "mp3", "mp4"
 # excluded path prefixes (`filtered_log_lines`, lib_summary.py:11)
 EXCLUDED_PATH_PREFIXES = ["/admin", "/internal", "/healthz"]
 
-# excluded hosts (exact match; broadcast equi-join)
-EXCLUDED_HOSTS = ["evil.example.com", "localhost"]
-
 # servers that are always invalid (analog of INVALID_SERVERS,
 # /root/reference/libs/values.py:88-95: the ven1..ven6 family is marked
 # INVALID at discovery and never loaded). The synthetic corpus emits 'ven1'

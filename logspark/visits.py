@@ -5,8 +5,7 @@ minutes of inactivity (the `visit_standard_length` setting); import_logs
 replays log lines into that model and the reports count visits, actions
 per visit, and bounces (single-action visits). The reference pipeline
 stops at per-sink hit counts and delegates the visit model to the Matomo
-server (/root/reference/libs/lib_summary.py:33-119 reconciles *lines*, not
-visits) — this module supplies the Spark-native visit layer so the same
+server — this module supplies the Spark-native visit layer so the same
 reports come straight off the routed corpus.
 
 Shape & scale:
@@ -19,6 +18,12 @@ Shape & scale:
     partition at that visitor's hit count — if that ever dominates, split
     the key by day first (visits never span days in the report anyway and
     a >30-min gap at the day boundary is the overwhelmingly common case).
+  * the visit grain is ONE table, ``visit_table`` — the analog of Matomo's
+    ``log_visit``: one row per (ip, ua_k, visit_id) with the action count,
+    first/last action second and the day the visit opened. It groups on a
+    superset of the window's partition key, so it reuses that exchange.
+    Every visit-grain report is a select + group-by over it; column
+    pruning drops the aggregates a report does not read.
   * time is integer seconds-within-month derived from the parsed
     timestamp FIELDS (TZ-free: identical wall-clock math in any engine;
     never an instant comparison through a session zone).
@@ -39,7 +44,7 @@ def _tsec() -> F.Column:
     ) * 60 + F.second("ts")
 
 
-def sessionize_hits(df: DataFrame, gap_s: int = VISIT_GAP_S) -> DataFrame:
+def sessionize_hits(df: DataFrame) -> DataFrame:
     """Assign ``visit_id`` (per visitor key) to parsed hits.
 
     df needs (ip, user_agent, ts, doc_id). Ties on the same second are
@@ -52,7 +57,7 @@ def sessionize_hits(df: DataFrame, gap_s: int = VISIT_GAP_S) -> DataFrame:
     w = Window.partitionBy("ip", "ua_k").orderBy("tsec", "doc_id")
     is_new = (
         F.when(F.lag("tsec").over(w).isNull(), 1)
-        .when(F.col("tsec") - F.lag("tsec").over(w) > gap_s, 1)
+        .when(F.col("tsec") - F.lag("tsec").over(w) > VISIT_GAP_S, 1)
         .otherwise(0)
     )
     return df.withColumn("is_new", is_new).withColumn(
@@ -63,32 +68,46 @@ def sessionize_hits(df: DataFrame, gap_s: int = VISIT_GAP_S) -> DataFrame:
     )
 
 
-def _sessions(df: DataFrame, gap_s: int, sessionized: bool) -> DataFrame:
+def _sessions(df: DataFrame, sessionized: bool) -> DataFrame:
     """Reports share one sessionization pass when the caller has already
     materialized it (``sessionized=True`` — the contract harness
     checkpoints sessionize_hits once for the whole visit-report family;
-    at 10^12 rows that is ONE visitor-key shuffle instead of six)."""
-    return df if sessionized else sessionize_hits(df, gap_s)
+    at 10^12 rows that is ONE visitor-key shuffle instead of eight)."""
+    return df if sessionized else sessionize_hits(df)
 
 
-def visit_daily_stats(
-    df: DataFrame, gap_s: int = VISIT_GAP_S, sessionized: bool = False
-) -> DataFrame:
-    """Per day-of-month visit report: visits, bounces, actions.
-
-    A visit is attributed to the day of its FIRST hit (Matomo semantics).
-    Two aggregations: hits -> visits (on the visitor+visit key), then
-    visits -> days; both map-side-combinable, no window after the first.
-    """
-    s = _sessions(df, gap_s, sessionized)
-    visits = s.groupBy("ip", "ua_k", "visit_id").agg(
+def visit_table(s: DataFrame, *extra: F.Column) -> DataFrame:
+    """One row per visit of the sessionized hits ``s``: the visitor key and
+    visit_id, ``n_actions``, ``first_tsec``/``last_tsec`` (seconds within
+    the month) and ``dom``, the day of the FIRST hit (Matomo attributes a
+    visit to the day it opened). ``extra`` appends aggregates over columns
+    only some inputs carry (entry/exit stems, campaign attribution)."""
+    return s.groupBy("ip", "ua_k", "visit_id").agg(
         F.count("*").alias("n_actions"),
         F.min("tsec").alias("first_tsec"),
-    )
+        F.max("tsec").alias("last_tsec"),
+        *extra,
+    ).withColumn("dom", F.floor(F.col("first_tsec") / 86400).cast("int"))
+
+
+def _bucket(col: F.Column, buckets: list, top: str) -> F.Column:
+    """Label of the first (upper bound, label) bucket ``col`` fits under,
+    ``top`` above the last — a CASE expression, not a join, so nothing is
+    broadcast and the bucket table is versioned with the code the way
+    Matomo versions its config ranges."""
+    (hi, label), *rest = buckets
+    c = F.when(col <= hi, F.lit(label))
+    for hi, label in rest:
+        c = c.when(col <= hi, F.lit(label))
+    return c.otherwise(F.lit(top))
+
+
+def visit_daily_stats(df: DataFrame, sessionized: bool = False) -> DataFrame:
+    """Per day-of-month visit report: visits, bounces, actions — visits
+    rolled up by the day they opened; map-side-combinable, no window after
+    the sessionization."""
     return (
-        visits.withColumn(
-            "dom", F.floor(F.col("first_tsec") / 86400).cast("int")
-        )
+        visit_table(_sessions(df, sessionized))
         .groupBy("dom")
         .agg(
             F.count("*").alias("n_visits"),
@@ -99,9 +118,8 @@ def visit_daily_stats(
         )
     )
 
-def visitor_frequency(
-    df: DataFrame, gap_s: int = VISIT_GAP_S, sessionized: bool = False
-) -> DataFrame:
+
+def visitor_frequency(df: DataFrame, sessionized: bool = False) -> DataFrame:
     """Matomo VisitFrequency report: per day, visits split into NEW
     (the visitor key's first visit in the corpus window) vs RETURNING
     (visit_id > 1 — the key already opened an earlier visit), with the
@@ -111,20 +129,12 @@ def visitor_frequency(
     from the same (ip, user_agent) config-id fallback the visit model
     uses — consistent with how import_logs-fed servers see it.
 
-    Shape: sessionize (one shuffle on the visitor key) -> per-visit
-    aggregate; ``returning`` is a pure function of visit_id, so the day
-    rollup stays a map-side-combinable hash agg. Nothing new shuffles
-    beyond visit_daily_stats."""
-    s = _sessions(df, gap_s, sessionized)
-    visits = s.groupBy("ip", "ua_k", "visit_id").agg(
-        F.count("*").alias("n_actions"),
-        F.min("tsec").alias("first_tsec"),
-    )
+    ``returning`` is a pure function of visit_id, so the day rollup stays
+    a map-side-combinable hash agg. Nothing new shuffles beyond
+    visit_daily_stats."""
     ret = F.col("visit_id") > 1
     return (
-        visits.withColumn(
-            "dom", F.floor(F.col("first_tsec") / 86400).cast("int")
-        )
+        visit_table(_sessions(df, sessionized))
         .groupBy("dom")
         .agg(
             F.sum(F.when(ret, 0).otherwise(1)).alias("n_new_visits"),
@@ -139,29 +149,26 @@ def visitor_frequency(
     )
 
 
-def entry_exit_pages(
-    df: DataFrame, gap_s: int = VISIT_GAP_S, sessionized: bool = False
-) -> DataFrame:
+def entry_exit_pages(df: DataFrame, sessionized: bool = False) -> DataFrame:
     """Matomo Actions > Entry/Exit pages: per stem, how many visits ENTER
     on it (first action) and how many EXIT on it (last action).
 
     The reference pipeline stops at per-sink hit counts; Matomo's server
     derives this report from the visit model (same 30-min sessionization
-    as visit_daily_stats). Shape: the per-visit entry/exit stems fall out
-    of ONE aggregation on the visitor+visit key — `min(struct(tsec,
-    doc_id, stem))` picks the first action without a window (struct
-    ordering is lexicographic and (tsec, doc_id) is a total order within
-    the visit, so the stem component never decides). The per-visit rows
-    (corpus-sized / visit length) then UNION their entry and exit sides
-    and aggregate per stem — two shuffles total, both map-side
-    combinable; no join.
+    as visit_daily_stats). Shape: the per-visit entry/exit stems are two
+    extra visit-table aggregates — `min(struct(tsec, doc_id, stem))` picks
+    the first action without a window (struct ordering is lexicographic
+    and (tsec, doc_id) is a total order within the visit, so the stem
+    component never decides). The per-visit rows (corpus-sized / visit
+    length) then UNION their entry and exit sides and aggregate per stem
+    — two shuffles total, both map-side combinable; no join.
 
     100 TB: visit count ~= corpus rows / actions-per-visit; both
     aggregations are plain hash aggs on corpus-cardinality keys. The
     skew note on sessionize_hits (hot NAT visitor) applies unchanged.
     """
-    s = _sessions(df, gap_s, sessionized)
-    g = s.groupBy("ip", "ua_k", "visit_id").agg(
+    g = visit_table(
+        _sessions(df, sessionized),
         F.min(F.struct("tsec", "doc_id", "stem")).alias("e"),
         F.max(F.struct("tsec", "doc_id", "stem")).alias("x"),
     )
@@ -196,28 +203,23 @@ DURATION_BUCKETS = [
 
 
 def visit_duration_buckets(
-    df: DataFrame, gap_s: int = VISIT_GAP_S, sessionized: bool = False
+    df: DataFrame, sessionized: bool = False
 ) -> DataFrame:
     """Matomo VisitorInterest: distribution of visit lengths over the
     standard duration buckets (plus '30min+').
 
     duration = last-action tsec - first-action tsec (Matomo's
     visit_total_time without the final-action dwell estimate, which log
-    replay cannot know). One agg to per-visit min/max, one CASE, one
-    count per bucket — the bucket table is a CASE expression, not a
-    join, so nothing is broadcast and the plan is two hash aggs.
+    replay cannot know). One CASE over the visit table, one count per
+    bucket — the plan is two hash aggs.
     """
-    s = _sessions(df, gap_s, sessionized)
-    g = s.groupBy("ip", "ua_k", "visit_id").agg(
-        (F.max("tsec") - F.min("tsec")).alias("dur_s"),
-    )
-    bucket = F.when(F.col("dur_s") <= DURATION_BUCKETS[0][0],
-                    F.lit(DURATION_BUCKETS[0][1]))
-    for hi, label in DURATION_BUCKETS[1:]:
-        bucket = bucket.when(F.col("dur_s") <= hi, F.lit(label))
-    bucket = bucket.otherwise(F.lit("30min+"))
+    dur = F.col("last_tsec") - F.col("first_tsec")
     return (
-        g.withColumn("bucket", bucket)
+        visit_table(_sessions(df, sessionized))
+        .select(dur.alias("dur_s"))
+        .withColumn(
+            "bucket", _bucket(F.col("dur_s"), DURATION_BUCKETS, "30min+")
+        )
         .groupBy("bucket")
         .agg(
             F.count("*").alias("n_visits"),
@@ -226,9 +228,7 @@ def visit_duration_buckets(
     )
 
 
-def visit_hours(
-    df: DataFrame, gap_s: int = VISIT_GAP_S, sessionized: bool = False
-) -> DataFrame:
+def visit_hours(df: DataFrame, sessionized: bool = False) -> DataFrame:
     """Matomo VisitTime (server time): visits per hour-of-day.
 
     Per hour in which a visit OPENED (its first action's server hour):
@@ -243,13 +243,9 @@ def visit_hours(
     any engine lands on the same bucket. The distinct-visitor count is
     map-side partial over a 24-row key space.
     """
-    s = _sessions(df, gap_s, sessionized)
-    g = s.groupBy("ip", "ua_k", "visit_id").agg(
-        F.count("*").alias("n_actions"),
-        F.min("tsec").alias("first_tsec"),
-    )
     return (
-        g.withColumn(
+        visit_table(_sessions(df, sessionized))
+        .withColumn(
             "hour_of_day",
             F.expr("CAST((first_tsec % 86400) DIV 3600 AS INT)"),
         )
@@ -279,26 +275,17 @@ PAGES_BUCKETS = [
 
 
 def pages_per_visit_buckets(
-    df: DataFrame, gap_s: int = VISIT_GAP_S, sessionized: bool = False
+    df: DataFrame, sessionized: bool = False
 ) -> DataFrame:
     """Matomo VisitorInterest (second half): distribution of visits by
     actions-per-visit over the standard ranges (plus '14p+') — the
-    companion to visit_duration_buckets, same shape: one agg to
-    per-visit action counts, one CASE, one count per bucket. The bucket
-    table is a CASE expression (bounded, versioned with the code the way
-    Matomo versions its config ranges), not a join."""
-    s = _sessions(df, gap_s, sessionized)
-    g = s.groupBy("ip", "ua_k", "visit_id").agg(
-        F.count("*").alias("n_actions"),
-    )
-    bucket = F.when(
-        F.col("n_actions") <= PAGES_BUCKETS[0][0], F.lit(PAGES_BUCKETS[0][1])
-    )
-    for hi, label in PAGES_BUCKETS[1:]:
-        bucket = bucket.when(F.col("n_actions") <= hi, F.lit(label))
-    bucket = bucket.otherwise(F.lit("14p+"))
+    companion to visit_duration_buckets, same shape: one CASE over the
+    visit table, one count per bucket."""
     return (
-        g.withColumn("bucket", bucket)
+        visit_table(_sessions(df, sessionized))
+        .withColumn(
+            "bucket", _bucket(F.col("n_actions"), PAGES_BUCKETS, "14p+")
+        )
         .groupBy("bucket")
         .agg(
             F.count("*").alias("n_visits"),
@@ -308,7 +295,7 @@ def pages_per_visit_buckets(
 
 
 def campaign_attribution(
-    df: DataFrame, gap_s: int = VISIT_GAP_S, sessionized: bool = False
+    df: DataFrame, sessionized: bool = False
 ) -> DataFrame:
     """Matomo Referrers > Campaigns over the visit model: visits
     attributed to the campaign of their FIRST campaign-tagged action
@@ -324,15 +311,15 @@ def campaign_attribution(
     Shape & scale: over the shared sessionization pass this is two hash
     aggregations and nothing else — per-visit attribution is a single
     min-of-struct ordered by (tsec, doc_id) (conditional on the campaign
-    column, so untagged visits fold to NULL and drop), computed in the
-    SAME aggregation as the per-visit action count; the hits->visits agg
-    groups on a superset of the sessionization's visitor key, so it
-    reuses that partitioning with ZERO new shuffles (plan-pinned in
-    tests/test_plans.py), and the final campaign rollup shuffles a
-    visit-sized table on a campaign-cardinality key (tiny)."""
+    column, so untagged visits fold to NULL and drop), an extra aggregate
+    of the visit table; that table groups on a superset of the
+    sessionization's visitor key, so it reuses that partitioning with
+    ZERO new shuffles (plan-pinned in tests/test_plans.py), and the final
+    campaign rollup shuffles a visit-sized table on a campaign-cardinality
+    key (tiny)."""
     from logspark import actions
 
-    s = _sessions(df, gap_s, sessionized)
+    s = _sessions(df, sessionized)
     s = s.withColumn(
         "campaign", actions.first_param_expr(actions.CAMPAIGN_NAME_PARAMS)
     ).withColumn(
@@ -340,8 +327,8 @@ def campaign_attribution(
     ).withColumn(
         "c_medium", actions.first_param_expr(actions.CAMPAIGN_MEDIUM_PARAMS)
     )
-    per_visit = s.groupBy("ip", "ua_k", "visit_id").agg(
-        F.count("*").alias("n_actions"),
+    per_visit = visit_table(
+        s,
         F.min(
             F.when(
                 F.col("campaign").isNotNull(),
@@ -370,7 +357,7 @@ def campaign_attribution(
 
 
 def unique_visitors_daily(
-    df: DataFrame, gap_s: int = VISIT_GAP_S, sessionized: bool = False
+    df: DataFrame, sessionized: bool = False
 ) -> DataFrame:
     """Matomo's nb_uniq_visitors for the Visits report: per day-of-month,
     distinct visitor keys ACTIVE that day (any action — Matomo counts a
@@ -387,7 +374,7 @@ def unique_visitors_daily(
     (day, visitor) key space that is corpus-bounded; the partial-agg
     dedup happens map-side per day. The approximate companion at
     10^12 rows is hll_distinct_ips' sketch shape."""
-    s = _sessions(df, gap_s, sessionized)
+    s = _sessions(df, sessionized)
     vk = F.concat(F.col("ip"), F.lit("\t"), F.col("ua_k"))
     return (
         s.withColumn("dom", F.floor(F.col("tsec") / 86400).cast("int"))

@@ -595,37 +595,32 @@ def test_referrer_attribution_is_broadcast(spark, corpus_parquet):
     assert "SortMergeJoin" not in txt
 
 
-def test_visit_stats_single_visitor_shuffle(spark, corpus_parquet):
-    """Sessionization shuffles ONCE on the visitor key; the two follow-up
-    aggregations must not add a second wide exchange of the hit rows
-    (visit grouping reuses the window's partitioning; only the final
-    day-of-month rollup of visit-sized rows may repartition)."""
+@pytest.mark.parametrize(
+    "report",
+    [
+        "visit_daily_stats",
+        "visitor_frequency",
+        "entry_exit_pages",
+        "visit_duration_buckets",
+        "visit_hours",
+        "pages_per_visit_buckets",
+        "campaign_attribution",
+    ],
+)
+def test_visit_stats_single_visitor_shuffle(spark, corpus_parquet, report):
+    """Sessionization shuffles ONCE on the visitor key; the visit table
+    groups on a superset of that key, so it must reuse that exchange and
+    never add a second wide exchange of the hit rows. Only the report's
+    rollup of visit-sized rows may repartition; entry_exit_pages (union of
+    the entry and exit sides) and visit_hours (distinct visitors per hour)
+    may take one more."""
     from logspark import parse, pipeline, visits
 
     df = pipeline.detokenized(spark.read.parquet(corpus_parquet))
     df = parse.parse_lines(df, "line").filter("parsed_ok")
-    out = visits.visit_daily_stats(df)
-    txt = plan_text(out)
-    # one exchange for (ip, ua_k) window+group, one for the tiny dom rollup
-    assert shuffle_count(txt) <= 2, txt
-
-
-def test_campaign_attribution_no_shuffle_beyond_sessionization(
-    spark, corpus_parquet
-):
-    """Campaign attribution over the shared visit model: the per-visit
-    min-of-struct attribution groups on a SUPERSET of the sessionization
-    window's (ip, ua_k) partitioning, so it must reuse that exchange; the
-    only additional exchange allowed is the final campaign-cardinality
-    rollup of visit-sized rows. Same budget as
-    test_visit_stats_single_visitor_shuffle: <= 2 total."""
-    from logspark import parse, pipeline, visits
-
-    df = pipeline.detokenized(spark.read.parquet(corpus_parquet))
-    df = parse.parse_lines(df, "line").filter("parsed_ok")
-    out = visits.campaign_attribution(df)
-    txt = plan_text(out)
-    assert shuffle_count(txt) <= 2, txt
+    txt = plan_text(getattr(visits, report)(df))
+    budget = 3 if report in ("entry_exit_pages", "visit_hours") else 2
+    assert shuffle_count(txt) <= budget, txt
 
 
 def test_pmi_collocations_takeordered_no_global_sort(spark, small_corpus):

@@ -41,6 +41,33 @@ def test_visit_splits_strictly_after_30min_gap(spark):
     assert got[4][2] == 1 and got[5][2] == 1
 
 
+def test_visit_table_one_row_per_visit(spark):
+    from logspark import visits
+
+    # tsec = seconds since day-of-month 0: 10:00 on the 5th
+    t0 = 5 * 86400 + 36000
+    df = _hits(
+        spark,
+        [
+            (1, "1.1.1.1", "ua", 0),
+            (2, "1.1.1.1", "ua", 60),
+            (3, "1.1.1.1", "ua", 7200),  # > 30 min gap: visit 2
+            (4, "3.3.3.3", "ua", 50400),  # opens 00:00 on day 6
+        ],
+    )
+    got = {
+        (r["ip"], r["visit_id"]): (
+            r["n_actions"], r["first_tsec"], r["last_tsec"], r["dom"]
+        )
+        for r in visits.visit_table(visits.sessionize_hits(df)).collect()
+    }
+    assert got == {
+        ("1.1.1.1", 1): (2, t0, t0 + 60, 5),
+        ("1.1.1.1", 2): (1, t0 + 7200, t0 + 7200, 5),
+        ("3.3.3.3", 1): (1, t0 + 50400, t0 + 50400, 6),
+    }
+
+
 def test_visitor_frequency_splits_new_vs_returning(spark):
     from logspark import visits
 
