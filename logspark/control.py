@@ -5,7 +5,8 @@ state machine (/root/reference/models/declarative.py:9-63, libs/
 lib_status.py:7-19, libs/lib_database.py:65-151):
 
   * ``control_log_file`` catalog            -> ``control_partitions`` table
-  * insert-if-absent (lib_database.py:74-94) -> left ANTI join + append (J2)
+  * insert-if-absent (lib_database.py:74-94) -> append control rows only for
+    the pending part ids (the resume filter below keeps LOADED ids out)
   * recovery TSV spill (lib_database.py:220-228) -> atomic commit of data +
     control rows per partition batch (the snapshot IS the recovery unit)
   * resume (lib_database.py:192-217)        -> a set difference over control

@@ -12,43 +12,80 @@ route column expressions applied to a stream, with
   * ``Trigger.AvailableNow`` for batch-parity testing: streaming counts must
     equal the batch pipeline's counts on the same input (test asserts this).
 
+Every parity query is one drain: ``_scratch()`` gives it a temp directory
+for its input copy and checkpoint (removed when the drain ends), and
+``drain`` runs its plan AvailableNow into a memory table and returns that
+table. The queries differ only in the plan and in how the input is split
+into files and micro-batches.
+
 Stateless transforms (parse/route) are identical code paths — one definition
 of the semantics for both engines' modes.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from contextlib import contextmanager
-
 from logspark import pipeline
+
+# Shuffle partitions a drain's stream starts with. Stateful streaming
+# operators instantiate ONE state store per shuffle partition per
+# micro-batch; each store pays open/commit/snapshot I/O every batch
+# regardless of row volume. The batch session's 2x-cores sizing is right
+# for wide batch shuffles but pure overhead for a drain whose state is
+# keyset-sized: per-store commit latency of (2x cores) stores x k batches
+# dominated the measured wall time on small corpora. On a real cluster this
+# is the same discipline as `spark.sql.streaming.numStatePartitions`-style
+# sizing: state partitions are sized to STATE VOLUME and executor count,
+# not to the batch shuffle width. The value is frozen into the checkpoint
+# when the stream first starts.
+DRAIN_SHUFFLE_PARTITIONS = 8
 
 
 @contextmanager
-def _drain_conf(spark: SparkSession, shuffle_partitions: int = 8):
-    """Clamp shuffle partitions for the duration of an AvailableNow drain.
-
-    Stateful streaming operators instantiate ONE state store per shuffle
-    partition per micro-batch; each store pays open/commit/snapshot I/O
-    every batch regardless of row volume. The batch session's 2x-cores
-    sizing (64 here) is right for wide batch shuffles but pure overhead
-    for a drain whose state is keyset-sized: 64 stores x k batches of
-    per-store commit latency dominated the measured wall time on small
-    corpora. On a real cluster this is the same discipline as
-    `spark.sql.streaming.numStatePartitions`-style sizing: state
-    partitions are sized to STATE VOLUME and executor count, not to the
-    batch shuffle width. The clamp applies only to streams STARTED inside
-    the block (partitioning is frozen into the checkpoint at first start);
-    the session value is restored afterwards."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+def _scratch():
+    """A temp directory for one drain's input copy and checkpoint. The
+    memory-sink rows live in driver memory, so the directory is dead weight
+    once the drain finishes and is removed on exit."""
+    base = tempfile.mkdtemp(prefix="logspark_stream_")
     try:
-        yield
+        yield base
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def drain(
+    spark: SparkSession, plan: DataFrame, mode: str, checkpoint: str
+) -> DataFrame:
+    """Run the streaming ``plan`` to the end of its input
+    (``Trigger.AvailableNow``) in output ``mode`` into a fresh memory
+    table and return that table. The stream starts with
+    ``DRAIN_SHUFFLE_PARTITIONS`` shuffle partitions; the session value is
+    restored afterwards, also when the stream fails."""
+    name = f"drain_{uuid.uuid4().hex}"
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(DRAIN_SHUFFLE_PARTITIONS))
+    try:
+        (
+            plan.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        spark.conf.set(key, old)
+    return spark.table(name)
 
 
 CORPUS_SCHEMA = T.StructType(
@@ -90,11 +127,6 @@ def read_corpus_stream(
     return reader.parquet(path)
 
 
-def routed_stream(spark: SparkSession, stream: DataFrame) -> DataFrame:
-    """Same detokenize/parse/route expressions as batch."""
-    return pipeline.routed_hits(spark, stream)
-
-
 def windowed_route_counts(routed: DataFrame, window: str = "1 hour") -> DataFrame:
     """Watermarked tumbling-window aggregation over event time (late rows
     beyond 2h dropped deterministically)."""
@@ -106,67 +138,27 @@ def windowed_route_counts(routed: DataFrame, window: str = "1 hour") -> DataFram
     )
 
 
-def run_available_now_counts(
-    spark: SparkSession, corpus_path: str, checkpoint: str
-) -> DataFrame:
-    """Drain the whole input with AvailableNow into an in-memory table of
-    per-route counts; returns the final counts DataFrame (batch parity)."""
-    stream = read_corpus_stream(spark, corpus_path)
-    routed = routed_stream(spark, stream)
-    counts = routed.groupBy("route").agg(F.count("*").alias("cnt"))
-    q = (
-        counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("route_counts_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("route_counts_stream")
-
-
 def route_counts_via_stream(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     """Batch-parity entry for the driver contract: materialize the given
     corpus to a scratch parquet dir, drain it through the streaming engine
     (AvailableNow), and return the final per-route counts — which must equal
     the batch pipeline's counts (and the DuckDB oracle) exactly.
     """
-    import tempfile
-    import uuid
-
-    base = tempfile.mkdtemp(prefix="logspark_stream_parity_")
-    try:
-        inp = f"{base}/in"
+    with _scratch() as base:
         # SINGLE-batch drain (max_files=None): per-route counts in complete
         # mode carry no cross-batch semantics to exercise — multi-batch
         # state survival is pinned by stateful_source_totals /
         # stream_dedup_doc_ids — so the second micro-batch cycle the old
         # 16-file/8-per-trigger shape paid here was pure state-store-commit
         # overhead (~40% of the drain's wall time at sf0.1)
-        corpus.repartition(16).write.mode("overwrite").parquet(inp)
-        name = f"route_counts_parity_{uuid.uuid4().hex[:8]}"
-        with _drain_conf(spark):
-            stream = read_corpus_stream(spark, inp, max_files=None)
-            routed = routed_stream(spark, stream)
-            counts = routed.groupBy("route").agg(F.count("*").alias("cnt"))
-            q = (
-                counts.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{base}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return spark.table(name)
-    finally:
-        # memory-sink rows live in driver memory; the scratch corpus copy +
-        # checkpoint are dead weight once the drain finishes (repeated
-        # driver runs were accumulating them)
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+        corpus.repartition(16).write.mode("overwrite").parquet(f"{base}/in")
+        stream = read_corpus_stream(spark, f"{base}/in", max_files=None)
+        counts = (
+            pipeline.routed_hits(spark, stream)
+            .groupBy("route")
+            .agg(F.count("*").alias("cnt"))
+        )
+        return drain(spark, counts, "complete", f"{base}/ck")
 
 
 def stateful_source_totals(spark: SparkSession, corpus: DataFrame) -> DataFrame:
@@ -181,31 +173,8 @@ def stateful_source_totals(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     input was micro-batched, so the returned frame (max over updates) is
     deterministic and must equal the batch ``groupBy(source).count()``.
     """
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="logspark_stateful_")
-    try:
-        return _stateful_source_totals(spark, corpus, base)
-    finally:
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def _stateful_source_totals(
-    spark: SparkSession, corpus: DataFrame, base: str
-) -> DataFrame:
-    import uuid
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    inp = f"{base}/in"
-    # two micro-batches (16 files / 8 per trigger): state MUST survive a
-    # batch boundary for the cumulative total to be right, and two batches
-    # prove that at 1/4 the per-batch state-store commit cost of eight
-    corpus.repartition(16).write.mode("overwrite").parquet(inp)
-    name = f"stateful_totals_{uuid.uuid4().hex[:8]}"
 
     def update(key, pdfs, state: GroupState):
         total = state.get[0] if state.exists else 0
@@ -214,30 +183,27 @@ def _stateful_source_totals(
         state.update((total,))
         yield pd.DataFrame({"source": [key[0]], "total": [total]})
 
-    with _drain_conf(spark):
-        stream = read_corpus_stream(spark, inp)
-        routed = routed_stream(spark, stream).select("source")
-        updates = routed.groupBy("source").applyInPandasWithState(
-            update,
-            outputStructType="source string, total long",
-            stateStructType="total long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    with _scratch() as base:
+        # two micro-batches (16 files / 8 per trigger): state MUST survive a
+        # batch boundary for the cumulative total to be right, and two
+        # batches prove that at 1/4 the per-batch state-store commit cost
+        # of eight
+        corpus.repartition(16).write.mode("overwrite").parquet(f"{base}/in")
+        stream = read_corpus_stream(spark, f"{base}/in")
+        updates = (
+            pipeline.routed_hits(spark, stream)
+            .select("source")
+            .groupBy("source")
+            .applyInPandasWithState(
+                update,
+                outputStructType="source string, total long",
+                stateStructType="total long",
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
         )
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{base}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return (
-        spark.table(name)
-        .groupBy("source")
-        .agg(F.max("total").alias("total"))
-    )
+        out = drain(spark, updates, "update", f"{base}/ck")
+    return out.groupBy("source").agg(F.max("total").alias("total"))
 
 
 def stream_dedup_doc_ids(spark: SparkSession, corpus: DataFrame) -> DataFrame:
@@ -252,35 +218,18 @@ def stream_dedup_doc_ids(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     ``dropDuplicatesWithinWatermark`` so state can be evicted; here the
     whole input is drained (AvailableNow) so full-state dedup is the
     correct semantics to verify."""
-    import tempfile
-    import uuid
-
-    base = tempfile.mkdtemp(prefix="logspark_stream_dedup_")
-    try:
-        inp = f"{base}/in"
+    with _scratch() as base:
         # each arrival wave is 8 files = one micro-batch: wave 2 re-sends
         # every doc in a LATER batch than its first arrival, so the dedup
         # state provably works across the batch boundary (two batches total)
-        corpus.repartition(8).write.mode("overwrite").parquet(inp)
-        corpus.repartition(8).write.mode("append").parquet(inp)
-        name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        with _drain_conf(spark):
-            stream = read_corpus_stream(spark, inp)
-            dedup = stream.select("doc_id", "source").dropDuplicates(["doc_id"])
-            q = (
-                dedup.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{base}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return spark.table(name)
-    finally:
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+        corpus.repartition(8).write.mode("overwrite").parquet(f"{base}/in")
+        corpus.repartition(8).write.mode("append").parquet(f"{base}/in")
+        dedup = (
+            read_corpus_stream(spark, f"{base}/in")
+            .select("doc_id", "source")
+            .dropDuplicates(["doc_id"])
+        )
+        return drain(spark, dedup, "append", f"{base}/ck")
 
 
 def stream_incremental_dedup(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -297,10 +246,6 @@ def stream_incremental_dedup(spark: SparkSession, docs: DataFrame) -> DataFrame:
     micro-batches — bounded by the candidate-pair count, which the
     selective banding keeps near-linear; unbounded deployments would use
     dropDuplicatesWithinWatermark keyed on ingest time."""
-    import shutil
-    import tempfile
-    import uuid
-
     from logspark import textops
 
     banded = textops.lsh_bands(
@@ -312,11 +257,16 @@ def stream_incremental_dedup(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
     new_bands = banded.filter(F.col("doc_id") % 2 == 1)
 
-    base = tempfile.mkdtemp(prefix="logspark_stream_ssj_")
-    try:
-        inp = f"{base}/in"
-        # 16 files + default maxFilesPerTrigger 8 -> two micro-batches
-        new_bands.repartition(16).write.mode("overwrite").parquet(inp)
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), True),
+            T.StructField("band", T.IntegerType(), True),
+            T.StructField("band_key", T.StringType(), True),
+        ]
+    )
+    with _scratch() as base:
+        # 16 files and no maxFilesPerTrigger: one data micro-batch
+        new_bands.repartition(16).write.mode("overwrite").parquet(f"{base}/in")
         # Materialize the historical band INDEX once: a static side that is
         # a live plan would re-run the whole shingle->minhash->band pass
         # EVERY micro-batch (the static side of a stream-static join is
@@ -324,36 +274,15 @@ def stream_incremental_dedup(spark: SparkSession, docs: DataFrame) -> DataFrame:
         # fresh). In production this is exactly the stored index table that
         # incremental_dedup maintains; a k-batch drain must read it, not
         # rebuild it k times.
-        hist_path = f"{base}/hist"
-        hist.write.mode("overwrite").parquet(hist_path)
-        hist_static = spark.read.parquet(hist_path)
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("band", T.IntegerType(), True),
-                T.StructField("band_key", T.StringType(), True),
-            ]
+        hist.write.mode("overwrite").parquet(f"{base}/hist")
+        joined = (
+            spark.readStream.schema(schema)
+            .parquet(f"{base}/in")
+            .join(spark.read.parquet(f"{base}/hist"), ["band", "band_key"])
+            .select(F.col("doc_id").alias("new_doc"), "hist_doc")
+            .dropDuplicates(["new_doc", "hist_doc"])
         )
-        name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-        with _drain_conf(spark):
-            stream = spark.readStream.schema(schema).parquet(inp)
-            joined = (
-                stream.join(hist_static, ["band", "band_key"])
-                .select(F.col("doc_id").alias("new_doc"), "hist_doc")
-                .dropDuplicates(["new_doc", "hist_doc"])
-            )
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{base}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return spark.table(name)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return drain(spark, joined, "append", f"{base}/ck")
 
 
 def session_windows_plan(
@@ -403,38 +332,19 @@ def session_windows_stream(
     (island-gap lag/cumsum sessionization + the same watermark cutoff),
     so both the session grouping and the watermark emission rule are
     under cross-engine test. Cross-batch session-merge state is pinned
-    separately by test_streaming.py's two-wave drain.
+    separately by test_streaming_session_windows_merge_across_batches.
 
     At 100 TB: state is (open sessions)-sized, partitioned by user_id
     hash; eviction is exactly this emission rule, so state never grows
     past the active-user working set. Returns the emitted (closed)
     sessions."""
-    import shutil
-    import tempfile
-    import uuid
-
-    base = tempfile.mkdtemp(prefix="logspark_stream_sessions_")
-    try:
-        inp = f"{base}/in"
+    with _scratch() as base:
         events.select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
-        ).repartition(8).write.mode("overwrite").parquet(inp)
-        name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-        with _drain_conf(spark):
-            stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(inp)
-            sess = session_windows_plan(stream, gap=gap, delay=delay)
-            q = (
-                sess.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{base}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return spark.table(name)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        ).repartition(8).write.mode("overwrite").parquet(f"{base}/in")
+        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(f"{base}/in")
+        sess = session_windows_plan(stream, gap=gap, delay=delay)
+        return drain(spark, sess, "append", f"{base}/ck")
 
 
 def click_attribution_stream(
@@ -463,32 +373,23 @@ def click_attribution_stream(
     extraction (logspark.timeutil) — NOT a CAST, whose wall->instant map
     goes through the session zone and is non-monotonic across DST folds.
     All comparisons then happen on absolute instants: session-TZ-proof."""
-    import tempfile
-    import uuid
+    from logspark import timeutil
 
-    base = tempfile.mkdtemp(prefix="logspark_stream_join_")
-    try:
-        inp = f"{base}/in"
+    instant = F.timestamp_micros(F.expr(timeutil.ntz_epoch_us_sql("ts")))
+    with _scratch() as base:
         # 8 files / 4 per trigger -> two micro-batches: view-state buffered
         # in batch 1 must join clicks arriving in batch 2 (and the
         # watermark must not evict it), which two batches prove at a
         # quarter of the per-batch join-state commit cost of eight
-        events.repartition(8).write.mode("overwrite").parquet(inp)
-        name = f"click_attr_{uuid.uuid4().hex[:8]}"
-        schema = events.schema
+        events.repartition(8).write.mode("overwrite").parquet(f"{base}/in")
 
         def src():
             return (
-                spark.readStream.schema(schema)
+                spark.readStream.schema(events.schema)
                 .option("maxFilesPerTrigger", 4)
-                .parquet(inp)
+                .parquet(f"{base}/in")
             )
 
-        from logspark import timeutil
-
-        instant = F.timestamp_micros(
-            F.expr(timeutil.ntz_epoch_us_sql("ts"))
-        )
         views = (
             src()
             .filter(F.col("event_type") == "view")
@@ -516,21 +417,7 @@ def click_attribution_stream(
                 f"AND click_ts <= view_ts + interval {horizon_min} minutes"
             ),
         ).select("view_id", "click_id", "user_id")
-        with _drain_conf(spark):
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{base}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return spark.table(name)
-    finally:
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
+        return drain(spark, joined, "append", f"{base}/ck")
 
 
 def start_fanout_stream(
@@ -550,8 +437,7 @@ def start_fanout_stream(
     task."""
     from logspark import sinks
 
-    stream = read_corpus_stream(spark, corpus_path)
-    routed = routed_stream(spark, stream)
+    routed = pipeline.routed_hits(spark, read_corpus_stream(spark, corpus_path))
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sinks.write_fanout(batch_df, f"{out_dir}/epoch={int(epoch_id)}")
@@ -582,47 +468,26 @@ def slo_alerts_via_stream(
     state is one row per (source, day, hour) — keyset-sized, bounded by
     retention, never corpus-sized.
     """
-    import shutil
-    import tempfile
-    import uuid
-
-    base = tempfile.mkdtemp(prefix="logspark_slo_stream_")
-    try:
-        inp = f"{base}/in"
-        corpus.repartition(16).write.mode("overwrite").parquet(inp)
-        name = f"slo_alerts_{uuid.uuid4().hex[:8]}"
-        with _drain_conf(spark):
-            stream = read_corpus_stream(spark, inp, max_files=None)
-            routed = routed_stream(spark, stream).filter(F.col("parsed_ok"))
-            agg = routed.groupBy(
-                "source",
-                F.dayofmonth("ts").alias("day"),
-                F.hour("ts").alias("hour"),
-            ).agg(
-                F.count("*").alias("n_req"),
-                F.sum(
-                    F.when(F.col("status") >= 500, 1).otherwise(0)
-                ).alias("n_5xx"),
-            )
-            out = agg.select(
-                "source",
-                "day",
-                "hour",
-                "n_req",
-                "n_5xx",
-                F.expr(f"n_5xx * 1000000 > n_req * {int(target_ppm)}").alias(
-                    "breached"
-                ),
-            )
-            q = (
-                out.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{base}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return spark.table(name)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    with _scratch() as base:
+        corpus.repartition(16).write.mode("overwrite").parquet(f"{base}/in")
+        stream = read_corpus_stream(spark, f"{base}/in", max_files=None)
+        routed = pipeline.routed_hits(spark, stream).filter(F.col("parsed_ok"))
+        agg = routed.groupBy(
+            "source",
+            F.dayofmonth("ts").alias("day"),
+            F.hour("ts").alias("hour"),
+        ).agg(
+            F.count("*").alias("n_req"),
+            F.sum(F.when(F.col("status") >= 500, 1).otherwise(0)).alias("n_5xx"),
+        )
+        out = agg.select(
+            "source",
+            "day",
+            "hour",
+            "n_req",
+            "n_5xx",
+            F.expr(f"n_5xx * 1000000 > n_req * {int(target_ppm)}").alias(
+                "breached"
+            ),
+        )
+        return drain(spark, out, "complete", f"{base}/ck")

@@ -420,8 +420,8 @@ def test_streaming_batch_parity(spark, tmp_path):
     }
     stream_counts = {
         r["route"]: r["cnt"]
-        for r in streaming.run_available_now_counts(
-            spark, corpus_path, str(tmp_path / "sckpt")
+        for r in streaming.route_counts_via_stream(
+            spark, spark.read.parquet(corpus_path)
         ).collect()
     }
     assert stream_counts == batch_counts
@@ -433,18 +433,9 @@ def test_streaming_windowed_counts(spark, tmp_path):
     corpus_path = str(tmp_path / "wcorpus")
     synth.write_corpus(spark, 800, corpus_path)
     stream = streaming.read_corpus_stream(spark, corpus_path)
-    routed = streaming.routed_stream(spark, stream)
+    routed = pipeline.routed_hits(spark, stream)
     win = streaming.windowed_route_counts(routed, "6 hours")
-    q = (
-        win.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("win_counts")
-        .option("checkpointLocation", str(tmp_path / "wckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table("win_counts")
+    out = streaming.drain(spark, win, "append", str(tmp_path / "wckpt"))
     total = out.agg(F.sum("cnt")).collect()[0][0]
     # append mode only emits windows past the watermark; with bounded input
     # at least the early windows must have been finalized
@@ -562,7 +553,6 @@ def test_streaming_session_windows_merge_across_batches(spark, tmp_path):
     not passed by the final watermark) must NOT be emitted."""
     import datetime as dt
     import os
-    import uuid
 
     from logspark import streaming
 
@@ -602,32 +592,66 @@ def test_streaming_session_windows_merge_across_batches(spark, tmp_path):
     # FileStreamSource batches by modification time: force wave order
     os.utime(files[0], (1_000_000, 1_000_000))
     os.utime(files[1], (2_000_000, 2_000_000))
-    name = f"sess_merge_{uuid.uuid4().hex[:8]}"
-    with streaming._drain_conf(spark):
-        stream = (
-            spark.readStream.schema(streaming.EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(inp)
-        )
-        q = (
-            streaming.session_windows_plan(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = (
+        spark.readStream.schema(streaming.EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(inp)
+    )
+    out = streaming.drain(
+        spark,
+        streaming.session_windows_plan(stream),
+        "append",
+        str(tmp_path / "ck"),
+    )
     got = sorted(
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.table(name).collect()
+        for r in out.collect()
     )
     assert got == [
         (1, t0, t0 + 14 * h, 3),        # merged across the boundary
         (1, t0 + 30 * h, t0 + 36 * h, 1),
     ]
+
+
+def test_drain_restores_shuffle_partitions(spark, small_corpus, tmp_path):
+    """A drain's stream runs with DRAIN_SHUFFLE_PARTITIONS state stores,
+    and the session's shuffle-partition count comes back afterwards —
+    also when the stream fails."""
+    from logspark import streaming
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != str(streaming.DRAIN_SHUFFLE_PARTITIONS)
+
+    small_corpus.repartition(2).write.parquet(str(tmp_path / "in"))
+    stream = streaming.read_corpus_stream(spark, str(tmp_path / "in"))
+    counts = stream.groupBy("source").count()
+    out = streaming.drain(spark, counts, "complete", str(tmp_path / "ck"))
+    assert out.agg(F.sum("count")).collect()[0][0] == small_corpus.count()
+    assert spark.conf.get(key) == before
+    stores = [d for d in os.listdir(tmp_path / "ck" / "state" / "0") if d.isdigit()]
+    assert len(stores) == streaming.DRAIN_SHUFFLE_PARTITIONS
+
+    bad = streaming.read_corpus_stream(spark, str(tmp_path / "in")).select(
+        F.raise_error(F.lit("drain-boom"))
+    )
+    with pytest.raises(Exception, match="drain-boom"):
+        streaming.drain(spark, bad, "append", str(tmp_path / "ck_bad"))
+    assert spark.conf.get(key) == before
+
+
+def test_stream_drains_leave_no_scratch(spark, small_corpus, tmp_path, monkeypatch):
+    """The input copy and checkpoint of a drain are removed when it ends;
+    the returned memory table stays readable."""
+    import tempfile
+
+    from logspark import streaming
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = streaming.route_counts_via_stream(spark, small_corpus)
+    assert out.agg(F.sum("cnt")).collect()[0][0] == small_corpus.count()
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_job_anonymize_ip_scrubs_sinks(spark, tmp_path):
