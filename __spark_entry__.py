@@ -15,6 +15,7 @@ identical integer inputs so value-hashes match bit-for-bit.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,6 +26,7 @@ from logspark import gen_sql, pipeline, portable_hash, simsearch, sketch, textop
 from logspark import tokens as tokens_mod
 from logspark import layout as layout_mod
 from logspark import route as route_mod
+from logspark import status as status_mod
 
 
 # ---------------------------------------------------------------------------
@@ -60,11 +62,10 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, path)
     widen = _WIDEN_CACHE.get(key)
     if widen is None:
-        try:
-            size = os.path.getsize(path)
-        except OSError:
-            size = 0
-        widen = size >= 256 * 1024 and df.rdd.getNumPartitions() * 2 <= cores
+        widen = (
+            os.path.getsize(path) >= 256 * 1024
+            and df.rdd.getNumPartitions() * 2 <= cores
+        )
         _WIDEN_CACHE[key] = widen
     return df.repartition(cores) if widen else df
 
@@ -256,9 +257,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q_log_route_counts(spark, sf_dir):
-    return (
-        _routed(spark, sf_dir).groupBy("route").agg(F.count("*").alias("cnt"))
-    )
+    return route_mod.route_counts(_routed(spark, sf_dir))
 
 
 def q_log_sink_counts(spark, sf_dir):
@@ -328,28 +327,15 @@ def q_log_topk_recent_visits(spark, sf_dir):
 
 def q_log_date_status(spark, sf_dir):
     """A2+A3: per-(source, date) quota rollup with a date-regime switch
-    (lib_status.py:56-82 analog)."""
-    r = _routed(spark, sf_dir).filter(F.col("route") == "visit")
-    agg = r.groupBy("source", F.to_date("ts").alias("log_date")).agg(
-        F.count("*").alias("loaded")
-    )
-    expected = (
-        F.when(
-            (F.col("source") == "apache-hiperion")
-            & (F.col("log_date") > F.lit("2024-03-15").cast("date")),
-            120,
-        )
-        .when(F.col("source") == "apache-hiperion", 150)
-        .when(F.col("source") == "varnish02", 20)
-        .otherwise(10)
-    )
-    out = agg.withColumn("expected", expected)
-    status = (
-        F.when(F.col("loaded") >= F.col("expected"), "LOADED")
-        .when(F.col("loaded") > 0, "PARTIAL")
+    (lib_status.py:56-82 analog), status codes rendered as the oracle's
+    text."""
+    ds = status_mod.rollup_date_status(_routed(spark, sf_dir), spark)
+    name = (
+        F.when(F.col("status") == status_mod.S_LOADED, "LOADED")
+        .when(F.col("status") == status_mod.S_PARTIAL, "PARTIAL")
         .otherwise("QUEUE")
     )
-    return out.withColumn("status", status)
+    return ds.withColumn("status", name)
 
 
 def q_log_bot_rate_by_source(spark, sf_dir):
@@ -1481,6 +1467,25 @@ def q_log_rollup_counts(spark, sf_dir):
     )
 
 
+def _grok_counts(spark, sf_dir, extract) -> DataFrame:
+    """Shared shape of the per-format grok contract queries: run
+    ``extract`` over the raw (undispatched) line stream, aggregate
+    (method, status) hit counts + distinct client IPs. The anchored match
+    IS the format dispatch — every other format's lines (and corrupt
+    lines) fail structurally; the oracle aggregates the regex-free corpus
+    ground truth for exactly that format, so a template that over- or
+    under-matches cannot agree with it."""
+    g = extract(pipeline.detokenized(_corpus(spark, sf_dir)))
+    return (
+        g.filter(F.col("status") != "")
+        .groupBy("method", F.col("status").cast("int").alias("status"))
+        .agg(
+            F.count("*").alias("cnt"),
+            F.countDistinct("ip").alias("n_ips"),
+        )
+    )
+
+
 def q_grok_ncsa_counts(spark, sf_dir):
     """User-facing grok layer: the NCSA combined template compiled to ONE
     anchored regex, fields extracted as codegen column expressions;
@@ -1489,15 +1494,8 @@ def q_grok_ncsa_counts(spark, sf_dir):
     fields, so a wrong pattern cannot agree with itself."""
     from logspark import grok
 
-    lines = pipeline.detokenized(_corpus(spark, sf_dir))
-    g = grok.grok_extract(lines, grok.NCSA_COMBINED_TEMPLATE)
-    return (
-        g.filter(F.col("status") != "")
-        .groupBy("method", F.col("status").cast("int").alias("status"))
-        .agg(
-            F.count("*").alias("cnt"),
-            F.countDistinct("ip").alias("n_ips"),
-        )
+    return _grok_counts(
+        spark, sf_dir, partial(grok.grok_extract, template=grok.NCSA_COMBINED_TEMPLATE)
     )
 
 
@@ -1509,37 +1507,8 @@ def q_grok_w3c_counts(spark, sf_dir):
     the regex-FREE ground truth again."""
     from logspark import grok
 
-    lines = pipeline.detokenized(_corpus(spark, sf_dir))
-    g = grok.grok_extract(lines, grok.W3C_EXTENDED_TEMPLATE)
-    return (
-        g.filter(F.col("status") != "")
-        .groupBy("method", F.col("status").cast("int").alias("status"))
-        .agg(
-            F.count("*").alias("cnt"),
-            F.countDistinct("ip").alias("n_ips"),
-        )
-    )
-
-
-def _grok_counts(spark, sf_dir, template) -> DataFrame:
-    """Shared shape of the per-format grok contract queries: compile the
-    template, extract over the raw (undispatched) line stream, aggregate
-    (method, status) hit counts + distinct client IPs. The anchored match
-    IS the format dispatch — every other format's lines (and corrupt
-    lines) fail structurally; the oracle aggregates the regex-free corpus
-    ground truth for exactly that format, so a template that over- or
-    under-matches cannot agree with it."""
-    from logspark import grok
-
-    lines = pipeline.detokenized(_corpus(spark, sf_dir))
-    g = grok.grok_extract(lines, template)
-    return (
-        g.filter(F.col("status") != "")
-        .groupBy("method", F.col("status").cast("int").alias("status"))
-        .agg(
-            F.count("*").alias("cnt"),
-            F.countDistinct("ip").alias("n_ips"),
-        )
+    return _grok_counts(
+        spark, sf_dir, partial(grok.grok_extract, template=grok.W3C_EXTENDED_TEMPLATE)
     )
 
 
@@ -1551,7 +1520,9 @@ def q_grok_iis_counts(spark, sf_dir):
     /root/reference/libs/lib_file_name.py:120-136)."""
     from logspark import grok
 
-    return _grok_counts(spark, sf_dir, grok.IIS_TEMPLATE)
+    return _grok_counts(
+        spark, sf_dir, partial(grok.grok_extract, template=grok.IIS_TEMPLATE)
+    )
 
 
 def q_grok_cloudfront_counts(spark, sf_dir):
@@ -1560,7 +1531,9 @@ def q_grok_cloudfront_counts(spark, sf_dir):
     (no space-separated format can match one)."""
     from logspark import grok
 
-    return _grok_counts(spark, sf_dir, grok.CLOUDFRONT_TEMPLATE)
+    return _grok_counts(
+        spark, sf_dir, partial(grok.grok_extract, template=grok.CLOUDFRONT_TEMPLATE)
+    )
 
 
 def q_grok_ncsa_common_counts(spark, sf_dir):
@@ -1569,7 +1542,9 @@ def q_grok_ncsa_common_counts(spark, sf_dir):
     dialects (a combined line has trailing quoted fields and is rejected)."""
     from logspark import grok
 
-    return _grok_counts(spark, sf_dir, grok.NCSA_COMMON_TEMPLATE)
+    return _grok_counts(
+        spark, sf_dir, partial(grok.grok_extract, template=grok.NCSA_COMMON_TEMPLATE)
+    )
 
 
 def q_grok_nginx_json_counts(spark, sf_dir):
@@ -1577,19 +1552,12 @@ def q_grok_nginx_json_counts(spark, sf_dir):
     dispatch arm is from_json against the documented schema
     (grok.nginx_json_extract) — still one JVM-side parse per row, NULL
     struct on any other format's lines. Same (method, status) aggregate
-    contract as the grok templates; same regex-free ground-truth oracle."""
+    contract as the grok templates; same regex-free ground-truth oracle
+    (``status`` is a cast integer, never empty, so the shared non-empty
+    filter drops exactly the NULL-struct rows)."""
     from logspark import grok
 
-    lines = pipeline.detokenized(_corpus(spark, sf_dir))
-    g = grok.nginx_json_extract(lines)
-    return (
-        g.filter(F.col("status").isNotNull())
-        .groupBy("method", F.col("status").cast("int").alias("status"))
-        .agg(
-            F.count("*").alias("cnt"),
-            F.countDistinct("ip").alias("n_ips"),
-        )
-    )
+    return _grok_counts(spark, sf_dir, grok.nginx_json_extract)
 
 
 def q_geo_ua_rollup(spark, sf_dir):

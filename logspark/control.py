@@ -50,7 +50,7 @@ CONTROL_SCHEMA = (
 )
 
 
-RETRY_DIFF_LINES = int(os.environ.get("RETRY_DIFF_LINES", "110000"))
+RETRY_DIFF_LINES = 110_000
 
 
 def retry_adjusted_progress(lines_parsed, retry: int = RETRY_DIFF_LINES):
@@ -82,9 +82,9 @@ def progress_line_summary(
     a failure-summary line is trusted ONLY if it contains EXACTLY four
     integers (the guard); the FIRST integer is the lines-parsed cursor.
     Classification then follows the reference's retry rules: LOADED when
-    the cursor is within ±1 of expected, PARTIAL when it survives the
-    RETRY_DIFF_LINES rewind (cursor - retry > 0, progress = the rewound
-    cursor), else FAILED with zero progress.
+    the cursor is within ±1 of expected, else ``retry_adjusted_progress``:
+    PARTIAL when it survives the RETRY_DIFF_LINES rewind (cursor - retry >
+    0, progress = the rewound cursor), else FAILED with zero progress.
 
     Appends (n_ints, lines_parsed, status). Pure column expressions —
     JVM-side, no shuffle; the regexp runs twice per row (count + first
@@ -97,19 +97,19 @@ def progress_line_summary(
     )
     guarded = n_ints == 4
     loaded = guarded & first.between(expected - 1, expected + 1)
-    partial = guarded & ((first - retry) > 0)
+    rewound, retry_status = retry_adjusted_progress(first, retry)
     return (
         df.withColumn("n_ints", n_ints)
         .withColumn(
             "lines_parsed",
             F.when(loaded, first)
-            .when(partial, first - retry)
+            .when(guarded, rewound)
             .otherwise(F.lit(0).cast("bigint")),
         )
         .withColumn(
             "status",
             F.when(loaded, F.lit(LOADED))
-            .when(partial, F.lit(PARTIAL))
+            .when(guarded, retry_status)
             .otherwise(F.lit(FAILED)),
         )
     )

@@ -19,18 +19,6 @@ from pyspark.sql import functions as F
 
 from logspark import rules
 
-ROUTES = [
-    "invalid",
-    "http_error",
-    "redirect",
-    "bot",
-    "static",
-    "filtered",
-    "download",
-    "outlink",
-    "visit",
-]
-
 ROUTE_TO_SINK = {
     "invalid": "errors",
     "http_error": "errors",
@@ -42,6 +30,8 @@ ROUTE_TO_SINK = {
     "outlink": "outlinks",
     "visit": "visits",
 }
+
+ROUTES = list(ROUTE_TO_SINK)
 
 
 def route_expr(
@@ -78,10 +68,8 @@ def route_expr(
 
 
 def sink_expr(route: Column) -> Column:
-    c = F.when(route == "invalid", "errors")
+    c = F
     for r, s in ROUTE_TO_SINK.items():
-        if r == "invalid":
-            continue
         c = c.when(route == r, s)
     return c
 

@@ -26,7 +26,7 @@ BOT_RE = "(?i)(" + "|".join(BOT_MARKERS) + ")"
 STATIC_EXTS = ["css", "js", "png", "gif", "ico", "svg", "woff", "woff2", "jpg", "jpeg"]
 
 # download extensions (Matomo routes these to the downloads sink)
-DOWNLOAD_EXTS = ["pdf", "zip", "tar.gz", "exe", "dmg", "apk", "gz", "mp3", "mp4"]
+DOWNLOAD_EXTS = ["pdf", "zip", "exe", "dmg", "apk", "gz", "mp3", "mp4"]
 
 # excluded path prefixes (`filtered_log_lines`, lib_summary.py:11)
 EXCLUDED_PATH_PREFIXES = ["/admin", "/internal", "/healthz"]
@@ -46,10 +46,7 @@ def is_invalid_source(source: Column) -> Column:
 
 def ext_lookup_df(spark: SparkSession) -> DataFrame:
     """(ext, ext_kind) broadcast table: static | download."""
-    rows = [(e, "static") for e in STATIC_EXTS] + [
-        (e, "download") for e in DOWNLOAD_EXTS if e not in ("gz",)
-    ]
-    rows.append(("gz", "download"))
+    rows = [(e, "static") for e in STATIC_EXTS] + [(e, "download") for e in DOWNLOAD_EXTS]
     return local_table(spark, rows, "ext string, ext_kind string")
 
 

@@ -9,21 +9,22 @@ Re-expression of the reference's per-date state machine:
     upsert one row per (collection, date) — update only when the existing
     status is QUEUE or PARTIAL (guarded transition, :134-136).
 
-Quotas live in a small broadcast DataFrame (regime_start nullable), mirroring
-COLLECTION_TO_EXPECTED_DAILY_STATUS_SUM (lib_status.py:21-53).
+Quotas are an in-code list, ``DEFAULT_QUOTAS``, like the reference's
+COLLECTION_TO_EXPECTED_DAILY_STATUS_SUM dict (lib_status.py:21-53). The
+rollup compiles it into one CASE column, so the quota lookup is a
+projection over the aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from logspark.session import local_table
 
 S_QUEUE, S_PARTIAL, S_LOADED, S_COMPLETED = 0, 1, 2, 5
 
-# (source, regime_start | None, expected): later regime rows win when
-# log_date > regime_start — shape of lib_status.py:21-53.
+# (source, regime_start | None, expected): a dated regime applies when
+# log_date > regime_start, and the latest applicable one wins; the None row
+# is the source's base quota — shape of lib_status.py:21-53.
 DEFAULT_QUOTAS = [
     ("apache-hiperion", None, 150),
     ("apache-hiperion", "2024-03-15", 120),
@@ -35,42 +36,38 @@ DEFAULT_QUOTAS = [
 ]
 
 
-def quota_df(spark: SparkSession, quotas=None) -> DataFrame:
-    return local_table(
-        spark,
-        quotas or DEFAULT_QUOTAS,
-        "source STRING, regime_start STRING, expected INT",
-    ).withColumn("regime_start", F.col("regime_start").cast("date"))
+def _expected(source: Column, log_date: Column) -> Column:
+    """The quota CASE over ``DEFAULT_QUOTAS``: dated regimes are tested
+    latest ``regime_start`` first and base rows last, so the first match is
+    the latest applicable regime. A source with no row gets NULL."""
+    c = F
+    latest_first = sorted(DEFAULT_QUOTAS, key=lambda q: q[1] or "", reverse=True)
+    for src, start, n in latest_first:
+        cond = source == src
+        if start is not None:
+            cond = cond & (log_date > F.lit(start).cast("date"))
+        c = c.when(cond, n)
+    return c
 
 
-def rollup_date_status(
-    routed: DataFrame, spark: SparkSession, quotas=None
-) -> DataFrame:
-    """groupBy(source, date) -> loaded count -> quota CASE (A2+A3).
+def rollup_date_status(routed: DataFrame, spark: SparkSession) -> DataFrame:
+    """groupBy(source, date) -> loaded count -> quota CASE -> status (A2+A3).
 
-    Broadcast join against the quota table, then pick the most recent
-    applicable regime per (source, date) via max(regime_start <= date).
-    """
-    visits = routed.filter(F.col("route") == "visit")
-    agg = visits.groupBy(
-        "source", F.to_date("ts").alias("log_date")
-    ).agg(F.count("*").alias("loaded"))
-    q = F.broadcast(quota_df(spark, quotas))
-    j = agg.join(q, "source", "left").filter(
-        F.col("regime_start").isNull() | (F.col("log_date") > F.col("regime_start"))
-    )
-    # latest applicable regime wins
-    best = j.groupBy("source", "log_date", "loaded").agg(
-        F.max_by(
-            "expected", F.coalesce(F.col("regime_start"), F.lit("1970-01-01").cast("date"))
-        ).alias("expected")
+    One aggregation over the visit rows; ``expected`` is ``_expected``'s
+    CASE and ``status`` compares the two. ``spark`` is unused
+    (``perfbench/reports.py`` calls ``report(hits, spark)``)."""
+    agg = (
+        routed.filter(F.col("route") == "visit")
+        .groupBy("source", F.to_date("ts").alias("log_date"))
+        .agg(F.count("*").alias("loaded"))
+        .withColumn("expected", _expected(F.col("source"), F.col("log_date")))
     )
     status = (
         F.when(F.col("loaded") >= F.col("expected"), S_LOADED)
         .when(F.col("loaded") > 0, S_PARTIAL)
         .otherwise(S_QUEUE)
     )
-    return best.withColumn("status", status)
+    return agg.withColumn("status", status)
 
 
 def guarded_upsert(existing: DataFrame, updates: DataFrame) -> DataFrame:

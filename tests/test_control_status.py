@@ -66,6 +66,39 @@ def test_quota_rollup_regimes(spark, small_corpus):
             assert r["status"] == status.S_PARTIAL
 
 
+def test_date_status_latest_regime_wins(spark, monkeypatch):
+    """With two dated regimes the latest applicable one sets the quota;
+    on or before a regime start the earlier quota holds (strict >)."""
+    import datetime as dt
+
+    from logspark.session import local_table
+
+    monkeypatch.setattr(
+        status,
+        "DEFAULT_QUOTAS",
+        [("s", "2024-01-10", 20), ("s", None, 10), ("s", "2024-01-20", 30)],
+    )
+    days = [5, 10, 15, 20, 25]
+    hits = local_table(
+        spark,
+        [("s", dt.datetime(2024, 1, d, 12), "visit") for d in days]
+        + [("unlisted", dt.datetime(2024, 1, 5, 12), "visit")],
+        "source string, ts timestamp, route string",
+    )
+    got = {
+        (r["source"], r["log_date"].day): (r["expected"], r["status"])
+        for r in status.rollup_date_status(hits, spark).collect()
+    }
+    assert got == {
+        ("s", 5): (10, status.S_PARTIAL),
+        ("s", 10): (10, status.S_PARTIAL),
+        ("s", 15): (20, status.S_PARTIAL),
+        ("s", 20): (20, status.S_PARTIAL),
+        ("s", 25): (30, status.S_PARTIAL),
+        ("unlisted", 5): (None, status.S_PARTIAL),
+    }
+
+
 def test_guarded_date_status_upsert(spark):
     cols = "source STRING, log_date DATE, loaded BIGINT, expected INT, status INT"
     import datetime as dt

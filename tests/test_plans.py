@@ -907,7 +907,7 @@ def test_novelty_curve_min_agg_not_window(spark, docs40):
 
 
 def test_lookup_tables_are_local_relations(spark, corpus_parquet):
-    """The list-built lookup tables (extension kinds, quotas) are planned
+    """The list-built lookup tables (extension kinds) are planned
     as LocalRelations, which the driver broadcasts without a Spark job —
     never as RDD scans, which run one job per broadcast per query."""
     from logspark import pipeline, status
@@ -917,3 +917,22 @@ def test_lookup_tables_are_local_relations(spark, corpus_parquet):
         txt = plan_text(df)
         assert "Scan ExistingRDD" not in txt, txt
         assert "LocalTableScan" in txt, txt
+
+
+def test_date_status_single_rollup(spark):
+    """The date-status rollup is one aggregation: the quota lookup is a
+    CASE projection, so a join-free input plans no join and shuffles once
+    (the per-(source, date) count)."""
+    import datetime as dt
+
+    from logspark import status
+    from logspark.session import local_table
+
+    hits = local_table(
+        spark,
+        [("varnish02", dt.datetime(2024, 3, 1, 12), "visit")],
+        "source string, ts timestamp, route string",
+    )
+    txt = plan_text(status.rollup_date_status(hits, spark))
+    assert "Join" not in txt, txt
+    assert shuffle_count(txt) == 1, txt
