@@ -1060,12 +1060,17 @@ _IVF_INDEX_CACHE: dict = {}
 def _ivf_index_path(spark, sf_dir) -> str:
     """Materialized IVF index (corpus partitioned by sign bucket), built
     once per (session, sf_dir) in a scratch dir — the physical-layout half
-    of the ANN story (simsearch.build_ivf_index)."""
+    of the ANN story (simsearch.build_ivf_index). The scratch dir is
+    removed when the interpreter exits."""
+    import atexit
+    import shutil
     import tempfile
 
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _IVF_INDEX_CACHE:
-        path = tempfile.mkdtemp(prefix="logspark_ivf_index_") + "/emb"
+        scratch = tempfile.mkdtemp(prefix="logspark_ivf_index_")
+        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+        path = scratch + "/emb"
         simsearch.build_ivf_index(_load(spark, sf_dir, "embeddings"), path)
         _IVF_INDEX_CACHE[key] = path
     return _IVF_INDEX_CACHE[key]

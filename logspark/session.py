@@ -4,6 +4,18 @@ Local-mode settings mirror what we would submit to a multi-executor cluster
 (`spark-submit --py-files logspark.zip job.py`): AQE on (runtime re-plan +
 skew-join splitting), Arrow transport for the few pandas UDFs, explicit
 shuffle-partition sizing instead of the 200 default.
+
+Two settings act on the whole JVM or the whole Python process and only take
+hold when the first session is built, so every entry point (``job.main``,
+``perfbench/``, the tests) gets them through ``get_spark``:
+
+- ``spark.sql.codegen.cache.maxEntries=1000``: a reports pass uses about
+  122 generated classes, more than the default LRU cache of 100 holds, so
+  every warm pass recompiled 91-114 of them; with 1000 entries it compiles
+  none (``perfbench`` reports ``wall_s`` median 5.33 -> 3.41 s, 4 cores).
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: no Python call-site
+  capture around each DataFrame/Column call (``F.col`` 1.0-1.8 ms -> 0.24-0.41
+  ms; py4j commands per reports pass about 3,660 -> 2,130).
 """
 
 from __future__ import annotations
@@ -17,7 +29,8 @@ from pyspark.sql.types import StructType
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def default_driver_memory() -> str:
@@ -53,7 +66,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    cores: local[] thread count; defaults to $SPARK_GRAFT_CPUS or 32.
+    cores: local[] thread count; defaults to ``default_parallelism()``.
     shuffle_partitions: defaults to 2x cores (good spill/parallelism balance
     in local mode; on a real cluster this is sized to target ~128MB shuffle
     blocks per partition instead).
@@ -105,6 +118,20 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+        # JVM-global LRU cache of Janino-compiled classes, sized when the
+        # JVM first generates code. A reports pass uses ~122 distinct
+        # classes, so the default 100 evicted them before reuse and every
+        # warm pass recompiled 91-114 of them (CodegenMetrics compilation
+        # count), each new class cold in the JIT; at 1000 a warm pass
+        # compiles none. A job.main pass alone fits in 100.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # PySpark wraps every functions.*/Column/DataFrame call to capture
+        # its Python call site (active-session lookup, JVM origin set/clear,
+        # a conf read, a stack walk): without it F.col takes a quarter of
+        # the time and a reports pass sends ~40% fewer py4j commands. The
+        # cost: a DataFrame error no longer names the Python line of the
+        # Column that caused it. Read once per process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -1,12 +1,14 @@
 """Physical-plan regression tests: the shapes we designed for 100TB scale
 must not silently degrade (extra shuffles, lost pushdown, lost broadcast,
-lost column pruning). Captured via explain('formatted') text.
+lost column pruning). Captured via explain('formatted') text. The last
+tests pin get_spark's session defaults (compiled-code reuse, width).
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 
 import pyspark.sql.functions as F
@@ -936,3 +938,49 @@ def test_date_status_single_rollup(spark):
     txt = plan_text(status.rollup_date_status(hits, spark))
     assert "Join" not in txt, txt
     assert shuffle_count(txt) == 1, txt
+
+
+def test_warm_reports_pass_compiles_no_classes(spark, corpus_parquet, tmp_path, monkeypatch):
+    """A second reports pass over the same sinks finds every generated
+    class in Spark's compiled-code cache: the pass uses ~120 classes, which
+    the default 100-entry LRU cache evicted before reuse, recompiling most
+    of them on every pass."""
+    from logspark import job
+
+    out = str(tmp_path / "out")
+    assert job.main(
+        [
+            "--input", corpus_parquet, "--output", out,
+            "--checkpoint", str(tmp_path / "ckpt"),
+            "--partitions", "8", "--run-id", "codegen", "--cores", "8",
+        ]
+    ) == 0
+    # the benchmark's reports pass is the only one until it moves into
+    # logspark/; it is imported, not copied
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+    )
+    from reports import run_reports
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    run_reports(spark, out)
+    before = compiles.getCount()
+    run_reports(spark, out)
+    assert compiles.getCount() - before == 0
+
+
+def test_session_turns_off_call_site_capture(spark):
+    """get_spark's session skips PySpark's per-call Python call-site
+    capture (a JVM round trip and a stack walk on every Column call)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_default_parallelism_without_env_is_affinity(monkeypatch):
+    """Without $SPARK_GRAFT_CPUS the local[] width is the CPUs this process
+    may run on, not a fixed 32."""
+    from logspark.session import default_parallelism
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3
