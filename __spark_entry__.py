@@ -70,13 +70,15 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df.repartition(cores) if widen else df
 
 
-_CORPUS_CACHE: dict = {}
+_MEMO: dict = {}
 
 
-def _evict_other_sf_dirs(cache: dict, key: tuple) -> None:
-    """Cap each memo cache at the MOST RECENT sf_dir per session: every
-    entry pins a localCheckpoint'd RDD in executor storage, so a
-    long-lived session iterating many sf_dirs (the oracle harness, an
+def _memo(spark: SparkSession, sf_dir: str, name: str, build: Callable):
+    """``build()`` memoized per (session, sf_dir, name).
+
+    Each session keeps only its MOST RECENT sf_dir: every entry pins a
+    localCheckpoint'd RDD in executor storage (or an index directory), so
+    a long-lived session iterating many sf_dirs (the oracle harness, an
     interactive user) would otherwise accumulate checkpoint storage with
     no release (ADVICE r4). Dropping the Python reference releases the
     JVM plan (and with it the checkpointed RDD) through py4j GC +
@@ -84,9 +86,13 @@ def _evict_other_sf_dirs(cache: dict, key: tuple) -> None:
     unpersist for a lazy localCheckpoint. Entries for OTHER sessions
     (different applicationId) are left alone; the bench and the driver
     only ever use one sf_dir per session, so this never evicts for them."""
-    app_id, sf_dir = key
-    for k in [k for k in cache if k[0] == app_id and k[1] != sf_dir]:
-        del cache[k]
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, sf_dir, name)
+    if key not in _MEMO:
+        for k in [k for k in _MEMO if k[0] == app_id and k[1] != sf_dir]:
+            del _MEMO[k]
+        _MEMO[key] = build()
+    return _MEMO[key]
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -102,34 +108,27 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized per (session, sf_dir) so the driver's repeated queries()
     calls reuse one materialization.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CORPUS_CACHE:
-        _evict_other_sf_dirs(_CORPUS_CACHE, key)
+
+    def build():
         _load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
         rel = gen_sql.rel_from_documents("documents")
-        _CORPUS_CACHE[key] = pipeline.build_corpus_df(spark, rel).localCheckpoint(
-            eager=False
-        )
-    return _CORPUS_CACHE[key]
+        return pipeline.build_corpus_df(spark, rel).localCheckpoint(eager=False)
 
-
-_ROUTED_CACHE: dict = {}
+    return _memo(spark, sf_dir, "corpus", build)
 
 
 def _routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Routed hits, memoized + lineage-truncated per (session, sf_dir) —
     every log_* query shares one materialization of the parse/route chain
     instead of re-optimizing the full expression tree (see _corpus)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ROUTED_CACHE:
-        _evict_other_sf_dirs(_ROUTED_CACHE, key)
-        _ROUTED_CACHE[key] = pipeline.routed_hits(
-            spark, _corpus(spark, sf_dir)
-        ).localCheckpoint(eager=False)
-    return _ROUTED_CACHE[key]
-
-
-_SIGS_CACHE: dict = {}
+    return _memo(
+        spark,
+        sf_dir,
+        "routed",
+        lambda: pipeline.routed_hits(spark, _corpus(spark, sf_dir)).localCheckpoint(
+            eager=False
+        ),
+    )
 
 
 def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,16 +139,14 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash_estimate_eval's sketch-vs-truth grading). One signature build
     shared instead of two — the stored signature table a production index
     would read."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIGS_CACHE:
-        _evict_other_sf_dirs(_SIGS_CACHE, key)
-        _SIGS_CACHE[key] = textops.minhash_signatures(
+    return _memo(
+        spark,
+        sf_dir,
+        "minhash_sigs",
+        lambda: textops.minhash_signatures(
             _load(spark, sf_dir, "documents"), num_perms=textops.NUM_PERMS
-        ).localCheckpoint(eager=False)
-    return _SIGS_CACHE[key]
-
-
-_BPE_CACHE: dict = {}
+        ).localCheckpoint(eager=False),
+    )
 
 
 def _bpe_trained(spark: SparkSession, sf_dir: str):
@@ -160,18 +157,11 @@ def _bpe_trained(spark: SparkSession, sf_dir: str):
     sides are vocabulary-sized, so the checkpointed state is tiny."""
     from logspark import bpe
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BPE_CACHE:
-        _evict_other_sf_dirs(_BPE_CACHE, key)
+    def build():
         state, merges = bpe.train_state(_load(spark, sf_dir, "documents"))
-        _BPE_CACHE[key] = (
-            state.localCheckpoint(eager=False),
-            merges.localCheckpoint(eager=False),
-        )
-    return _BPE_CACHE[key]
+        return state.localCheckpoint(eager=False), merges.localCheckpoint(eager=False)
 
-
-_NEARDUP_CACHE: dict = {}
+    return _memo(spark, sf_dir, "bpe_trained", build)
 
 
 def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -182,17 +172,15 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shingle -> minhash -> band -> verify pass shared instead of four.
     The pair set is orders of magnitude smaller than the corpus, so the
     checkpointed state is tiny."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NEARDUP_CACHE:
-        _evict_other_sf_dirs(_NEARDUP_CACHE, key)
-        _NEARDUP_CACHE[key] = textops.minhash_neardup_verified(
+    return _memo(
+        spark,
+        sf_dir,
+        "neardup_pairs",
+        lambda: textops.minhash_neardup_verified(
             _load(spark, sf_dir, "documents"),
             signatures=_minhash_sigs(spark, sf_dir),
-        ).localCheckpoint(eager=False)
-    return _NEARDUP_CACHE[key]
-
-
-_EMB_PAIRS_CACHE: dict = {}
+        ).localCheckpoint(eager=False),
+    )
 
 
 def _embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,13 +189,14 @@ def _embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embedding_neardup, consensus_neardup) consume the IDENTICAL pair set
     — one band -> candidate-join -> exact-cosine pass shared instead of
     two. Pair-sized state, same discipline as _neardup_pairs."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_PAIRS_CACHE:
-        _evict_other_sf_dirs(_EMB_PAIRS_CACHE, key)
-        _EMB_PAIRS_CACHE[key] = simsearch.neardup_pairs(
+    return _memo(
+        spark,
+        sf_dir,
+        "embedding_pairs",
+        lambda: simsearch.neardup_pairs(
             _load(spark, sf_dir, "embeddings")
-        ).localCheckpoint(eager=False)
-    return _EMB_PAIRS_CACHE[key]
+        ).localCheckpoint(eager=False),
+    )
 
 
 _REL_DOCS = gen_sql.rel_from_documents("documents")
@@ -216,9 +205,6 @@ _ORACLE_ROUTED = gen_sql.oracle_routed_sql(
     select="doc_id, source, fmt, corrupt, route, sink, stem, query, status, dd, "
     "iso_date, hh, mi, ss, nbytes, bytes_missing, ua, referrer, ip, method",
 )
-
-
-_VISIT_SESSIONS_CACHE: dict = {}
 
 
 def _visit_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -231,13 +217,14 @@ def _visit_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same discipline as _neardup_pairs)."""
     from logspark import visits
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _VISIT_SESSIONS_CACHE:
-        _evict_other_sf_dirs(_VISIT_SESSIONS_CACHE, key)
-        _VISIT_SESSIONS_CACHE[key] = visits.sessionize_hits(
+    return _memo(
+        spark,
+        sf_dir,
+        "visit_sessions",
+        lambda: visits.sessionize_hits(
             _routed(spark, sf_dir).filter(F.col("parsed_ok"))
-        ).localCheckpoint(eager=False)
-    return _VISIT_SESSIONS_CACHE[key]
+        ).localCheckpoint(eager=False),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1054,9 +1041,6 @@ def q_semantic_dedup(spark, sf_dir):
     return simsearch.semantic_dedup_pairs(_load(spark, sf_dir, "embeddings"))
 
 
-_IVF_INDEX_CACHE: dict = {}
-
-
 def _ivf_index_path(spark, sf_dir) -> str:
     """Materialized IVF index (corpus partitioned by sign bucket), built
     once per (session, sf_dir) in a scratch dir — the physical-layout half
@@ -1066,14 +1050,14 @@ def _ivf_index_path(spark, sf_dir) -> str:
     import shutil
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_INDEX_CACHE:
+    def build() -> str:
         scratch = tempfile.mkdtemp(prefix="logspark_ivf_index_")
         atexit.register(shutil.rmtree, scratch, ignore_errors=True)
         path = scratch + "/emb"
         simsearch.build_ivf_index(_load(spark, sf_dir, "embeddings"), path)
-        _IVF_INDEX_CACHE[key] = path
-    return _IVF_INDEX_CACHE[key]
+        return path
+
+    return _memo(spark, sf_dir, "ivf_index", build)
 
 
 def q_ivf_ann_topk_indexed(spark, sf_dir):
@@ -2031,37 +2015,33 @@ def q_scd2_user_segments(spark, sf_dir):
     is deterministic cross-engine. See logspark/scd.py."""
     from logspark import scd
 
-    ev = _load(spark, sf_dir, "events")
-    w_f = W.partitionBy("user_id").orderBy("ts", "event_id")
-    w_l = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    first = (
-        ev.withColumn("rn", F.row_number().over(w_f))
-        .filter("rn = 1")
-        .select(
-            "user_id",
-            F.col("event_type").alias("segment"),
-            F.col("ts").alias("valid_from"),
-            F.lit(None).cast("timestamp").alias("valid_to"),
+    def build():
+        ev = _load(spark, sf_dir, "events")
+        w_f = W.partitionBy("user_id").orderBy("ts", "event_id")
+        w_l = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
+        first = (
+            ev.withColumn("rn", F.row_number().over(w_f))
+            .filter("rn = 1")
+            .select(
+                "user_id",
+                F.col("event_type").alias("segment"),
+                F.col("ts").alias("valid_from"),
+                F.lit(None).cast("timestamp").alias("valid_to"),
+            )
         )
-    )
-    last = (
-        ev.withColumn("rn", F.row_number().over(w_l))
-        .filter("rn = 1")
-        .select("user_id", F.col("event_type").alias("segment"), "ts")
-    )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCD2_CACHE:
-        _evict_other_sf_dirs(_SCD2_CACHE, key)
-        # memoized + lineage-truncated: pit_segment_activity composes this
-        # dimension, so without the memo the two-window merge over events
-        # runs twice; the dim is versions-per-user small
-        _SCD2_CACHE[key] = scd.scd2_apply(
+        last = (
+            ev.withColumn("rn", F.row_number().over(w_l))
+            .filter("rn = 1")
+            .select("user_id", F.col("event_type").alias("segment"), "ts")
+        )
+        return scd.scd2_apply(
             first, last, key="user_id", attr="segment", ts="ts"
         ).localCheckpoint(eager=False)
-    return _SCD2_CACHE[key]
 
-
-_SCD2_CACHE: dict = {}
+    # memoized + lineage-truncated: pit_segment_activity composes this
+    # dimension, so without the memo the two-window merge over events runs
+    # twice; the dim is versions-per-user small
+    return _memo(spark, sf_dir, "scd2_dim", build)
 
 
 def q_funnel_conversion(spark, sf_dir):

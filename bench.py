@@ -7,65 +7,34 @@ the line past the driver's tail capture and BENCH_r03.json recorded
 the line carries):
 
   {"metric": "...", "value": <total_sec>, "unit": "sec", "sf": 0.1,
-   "cpus": 32, "bench_schema": 2,
-   "pipeline": {"rows": N, "sec": t, "rows_per_sec": r, "cores": 32},
-   "scaling": {"cores_lo": 4, "cores_hi": 16, "rows_per_sec_lo": ...,
-               "rows_per_sec_hi": ..., "efficiency_raw": ...,
-               "regime": "unsaturated"},
-   "scaling_saturated": {"cores_lo": 8, "cores_hi": 32, ...,
-               "efficiency_raw": ..., "hw_percore_factor": ...,
-               "efficiency_hw_normalized": ...},
+   "cpus": 4, "bench_schema": 2,
+   "pipeline": {"rows": N, "sec": t, "rows_per_sec": r, "cores": 4},
    "fanout_write": {...}, "corpus_prep_sec": ...,
-   "queries": {<slowest 8 only>}, "queries_n": 109,
+   "queries": {<slowest 8 only>}, "queries_n": 158,
    "queries_total_sec": ..., "queries_file": "BENCH_QUERIES.json"}
 
 Schema note (bench_schema=2): rounds 1-2 published the hw-normalized
 8->32 ratio under ``scaling.efficiency``; round 3 silently rebound that
-key to the raw 4->16 ratio. The ambiguous key is GONE — every ratio is
-now explicitly ``efficiency_raw`` or ``efficiency_hw_normalized``, each
-next to its regime string, and cross-round readers can key off
-``bench_schema`` to avoid mixing definitions.
+key to the raw 4->16 ratio, and rounds 3-5 published both ratios under
+explicit names. The scaling pairs are no longer measured (those records
+stay in BENCH_r04.json / BENCH_r05.json); cross-round readers can key
+off ``bench_schema`` to avoid mixing definitions.
 
 The headline metric mirrors BASELINE.json: end-to-end parsed+routed
 sequences/sec reading a materialized tokenized-sequence table
 (doc_id, tokens:array<int32>, n_tok, source) — detokenize (Arrow) ->
 format-detect -> parse -> enrich -> route -> per-(source,route,sink)
-aggregate. Scaling evidence per north_rule: the SAME job over the SAME
-input at two parallelism levels N and 4N,
-efficiency = throughput_hi / (4 * throughput_lo), target >= 0.8.
-
-Each scaling level runs in its OWN subprocess pinned to a cpuset of
-exactly that many cores (`taskset -c 0-{n-1}`): the JVM then sizes its
-GC/JIT/netty thread pools from the cpuset, so "local[8]" is a faithful
-8-core node instead of an 8-thread job borrowing a 32-core host's GC —
-measured, the unconfined local[8] ran ~6% faster than a true 8-core
-node, silently deflating the reported ratio's denominator.
-
-PRIMARY recorded pair: local[4] vs local[16] cpuset nodes — the
-UNSATURATED regime. The north rule's criterion is N -> 4N EXECUTORS:
-a real scale-up adds NODES, so per-core turbo frequency and memory
-bandwidth are constant across the two cluster sizes. On one shared
-32-core host that invariant only holds while at most half the cores
-are busy; with <= 16 of 32 cores loaded the two levels see the same
-per-core hardware and the raw ratio IS engine scaling — no
-normalization, no correction, measured 0.86 raw. The 8 -> 32 pair is
-recorded alongside (scaling_saturated): at 32 busy cores the job
-drops to ~1.3x per-core slower from single-socket bandwidth/turbo
-falloff alone (a pure-Python busy-loop control plus the load-matched
-4x-local[8]-vs-one-local[32] experiment in BASELINE.md both bound
-this), which a multi-node 4N cluster does not experience, so that
-pair's raw ratio under-reports engine scaling; its hw-normalized
-value is reported next to the raw one.
+aggregate. One Spark session builds the corpus, times that pipeline,
+times the fan-out write, then times every driver query.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   parquet dir for driver queries (default sf0.1)
-  SPARK_GRAFT_CPUS     high-parallelism level (default 32)
+  SPARK_GRAFT_CPUS     session cores (default: the CPUs this process may use)
   BENCH_CORPUS_ROWS    corpus size for throughput runs (default 8_000_000)
-  BENCH_SCALING        0 to skip the scaling runs entirely (default 1)
-  BENCH_SAT            0 to skip the saturated 8->32 secondary pair (default 1)
+  BENCH_REPS           timed throughput passes (default 4)
   BENCH_QUERIES        comma-list to subset the per-query section
-  BENCH_MAX_EXTRA      adaptive top-up cycle cap for the primary pair (default 2)
   BENCH_CACHE_DIR      corpus cache dir (default <repo>/.bench_cache)
+  BENCH_SIDECAR        full-detail JSON path (default <repo>/BENCH_QUERIES.json)
 """
 
 from __future__ import annotations
@@ -78,58 +47,38 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from logspark.session import default_parallelism, get_spark  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_parallelism()
 # 8M rows: each timed run carries ~0.8s of fixed plan+schedule cost
-# (measured via empty-input runs of the same tree). At 4M/32-core that is
-# ~14% of the run but only ~4% at 8 cores, structurally deflating the
-# scaling ratio — a 100TB job pays planning once, so the bench should
-# amortize it too. Measured same-host-window: 4M -> eff 0.548, 8M -> 0.786.
+# (measured via empty-input runs of the same tree); at 4M rows that was
+# ~14% of a 32-core run. A 100TB job pays planning once, so the bench
+# should amortize it too.
 CORPUS_ROWS = int(os.environ.get("BENCH_CORPUS_ROWS", "8000000"))
-DO_SCALING = os.environ.get("BENCH_SCALING", "1") != "0"
-DO_SAT = os.environ.get("BENCH_SAT", "1") != "0"
-# REPS sizes the alternating level cycles: the primary (unsaturated) pair
-# runs (REPS+1)//3 cycles and the saturated pair (REPS+1)//4 (default
-# REPS=8 -> 3 and 2 cycles). The efficiency estimate is a ratio of
-# per-level MINIMA, and each extra cycle is another chance for BOTH levels
-# to land in a clean host window (this sandbox throttles in minutes-long
-# windows; 3 cycles measurably under-sampled the clean state).
-REPS = int(os.environ.get("BENCH_REPS", "8"))
-# extra alternating primary-pair cycles allowed when the measured ratio
-# reads < 0.82 after the planned cycles (see the adaptive top-up in main)
-MAX_EXTRA = int(os.environ.get("BENCH_MAX_EXTRA", "2"))
+# timed throughput passes; the warm-up passes before them are not timed
+REPS = int(os.environ.get("BENCH_REPS", "4"))
+WARMS = 1 if REPS <= 2 else 2
 CACHE = os.environ.get("BENCH_CACHE_DIR", os.path.join(REPO, ".bench_cache"))
-# full per-query timings + per-cycle scaling samples land here; the stdout
-# line stays compact and carries this path (see module docstring)
+# full per-query timings + per-pass throughput samples land here; the
+# stdout line stays compact and carries this path (see module docstring)
 SIDECAR = os.environ.get("BENCH_SIDECAR", os.path.join(REPO, "BENCH_QUERIES.json"))
-# Scaling-level JVM: ParallelGC (measured at 32 cores on the 8M corpus:
-# ParallelGC 9.9-10.2s, G1 15-19s). The heap, young generation included,
-# is sized from the host by get_spark; a fixed -Xmn larger than that heap
-# stops the JVM from starting.
-LEVEL_JAVA = "-XX:+UseParallelGC"
 # 8MB split bins over the 256 ~2.2MB corpus files -> 128 identical scan
-# partitions at EVERY level (2 files/task): 4 balanced waves at 32 cores,
-# 16 at 8. Measured at 32 cores: 128 parts 7.6s, 256 parts 8.1s (2x task
-#-schedule overhead), 64 parts 9.0s (2-wave quantization); letting Spark
-# size splits from default parallelism gave 32 parts at local[32] (one
-# wave, straggler-exposed) and 13 ragged parts at local[8] — not even the
-# same physical plan at the two levels.
-SPLIT_MB = int(os.environ.get("BENCH_SPLIT_MB", "8"))
+# partitions whatever the core count (2 files/task): 4 balanced waves at
+# 32 cores, 16 at 8. Measured at 32 cores: 128 parts 7.6s, 256 parts 8.1s
+# (2x task-schedule overhead), 64 parts 9.0s (2-wave quantization);
+# letting Spark size splits from default parallelism gave 32 parts at
+# local[32] (one wave, straggler-exposed) and 13 ragged parts at local[8].
+SPLIT_MB = 8
 
 # headline driver queries timed at SF_DIR: the ENTIRE __spark_entry__
-# query contract (102 queries — parse/route, control rollups, TPC-H-ish
-# agg/join, windows, dedup/LSH, text analysis, similarity search,
-# streaming, multimodal) so a regression anywhere is visible
-# round-over-round. Set BENCH_QUERIES to a comma-list to subset.
+# query contract (parse/route, control rollups, TPC-H-ish agg/join,
+# windows, dedup/LSH, text analysis, similarity search, streaming,
+# multimodal) so a regression anywhere is visible round-over-round. Set
+# BENCH_QUERIES to a comma-list to subset.
 HEADLINE: list[str] | None = (
     os.environ["BENCH_QUERIES"].split(",") if os.environ.get("BENCH_QUERIES") else None
 )
-
-
-def _new_spark(cores: int):
-    from logspark.session import get_spark
-
-    return get_spark(cores=cores, app=f"bench-{cores}")
 
 
 def _force(df) -> int:
@@ -148,16 +97,15 @@ def _ensure_corpus(spark, n: int, path: str, partitions: int = 256) -> None:
 
 
 def _pin_scan_splits(spark) -> None:
-    """Pin the parquet split size so EVERY core level scans the identical,
-    balanced 128-partition plan (two ~2.2MB corpus files per task).
+    """Pin the parquet split size so the throughput scan is the identical,
+    balanced 128-partition plan (two ~2.2MB corpus files per task) at any
+    core count.
 
     Without this, Spark sizes maxSplitBytes from the session's default
     parallelism: at local[32] the 8M-row corpus coalesced to exactly 32
     scan partitions (a single wave — one straggler task extends the whole
     run 1:1) while local[8] packed ~13 partitions (two ragged waves with
-    3 idle cores in wave 2). The two "identical" jobs were not running
-    the same physical plan, and the wide level carried all the
-    wave-quantization risk. 128 tasks = 4 balanced waves at 32 cores /
+    3 idle cores in wave 2). 128 tasks = 4 balanced waves at 32 cores /
     16 at 8 (measured fastest of 64/128/256 — see SPLIT_MB). On a real
     cluster this is the same discipline as sizing splits to the DATA
     (~128MB blocks), never to whatever parallelism the session happens
@@ -179,7 +127,7 @@ def _pipeline_run(spark, path: str, reps: int, warms: int = 1) -> tuple[int, lis
     itself happens OFF the clock: py4j expression building + Catalyst
     analysis measured 1.2-1.6s per plan, a per-QUERY cost a 10^12-row
     job pays once, while this bench pays it per rep. Leaving it on the
-    clock taxed the 32-core level ~20% and the 8-core level ~5% for the
+    clock taxed a 32-core run ~20% and an 8-core run ~5% for the
     same fixed work — a strong-scaling artifact of a seconds-long toy
     run, not an engine property. Execution (optimize+codegen+run) is
     fully on the clock.
@@ -201,131 +149,11 @@ def _pipeline_run(spark, path: str, reps: int, warms: int = 1) -> tuple[int, lis
         t0 = time.time()
         rows = int(counts_sum.collect()[0][0])
         out.append(round(time.time() - t0, 3))
+    # the fan-out write and the query sweep run with the session's own
+    # split sizing, as the job and the driver do
+    spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    spark.conf.unset("spark.sql.files.openCostInBytes")
     return rows, out
-
-
-def _level_main(cores: int, reps: int, path: str, warms: int) -> None:
-    """Subprocess entry (`bench.py --level N`): one scaling level in its
-    own cpuset-confined JVM. Prints a single JSON line on stdout."""
-    from logspark.session import get_spark
-
-    spark = get_spark(
-        cores=cores,
-        app=f"bench-level-{cores}",
-        # identical shuffle layout at every level (the reduce side is
-        # map-side-combined and tiny; this just keeps the plans equal)
-        shuffle_partitions=64,
-        extra={
-            "spark.ui.showConsoleProgress": "false",
-            "spark.driver.extraJavaOptions": LEVEL_JAVA,
-        },
-    )
-    if reps <= 0:  # --ensure mode: just materialize the corpus
-        _ensure_corpus(spark, CORPUS_ROWS, path)
-        print(json.dumps({"cores": cores, "ensured": True}))
-        spark.stop()
-        return
-    probe = round(_cpu_probe(), 4)
-    rows, times = _pipeline_run(spark, path, reps=reps, warms=warms)
-    print(json.dumps({"cores": cores, "rows": rows, "times": times, "probe": probe}))
-    spark.stop()
-
-
-def _run_level(cores: int, reps: int, path: str, warms: int = 1) -> dict:
-    """Launch one scaling level as `taskset -c 0-{cores-1} python bench.py
-    --level ...`. The cpuset makes the JVM a faithful {cores}-core node:
-    availableProcessors honors the affinity mask, so GC/JIT/netty pools
-    size to the level instead of the host (an unconfined local[8] borrows
-    a 32-core ParallelGC and measured ~6% faster than a true 8-core
-    node, deflating the scaling ratio's denominator)."""
-    import subprocess
-
-    cmd = [
-        sys.executable,
-        os.path.abspath(__file__),
-        "--level",
-        str(cores),
-        "--reps",
-        str(reps),
-        "--corpus",
-        path,
-        "--warms",
-        str(warms),
-    ]
-    try:
-        subprocess.run(["taskset", "-c", "0", "true"], capture_output=True, check=True)
-        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-    except Exception:
-        pass  # no taskset on this host: run unconfined (and say so)
-    env = dict(os.environ)
-    # One retry: a level subprocess can die to transient host causes (a
-    # stray pkill, an OOM blip, a throttling window killing the JVM) —
-    # observed once in round 4 where a single dead 8-core runner aborted
-    # the ENTIRE bench and the driver recorded nothing for the round. A
-    # level that fails twice raises with the captured stderr tail.
-    last_err = ""
-    for attempt in range(2):
-        out = subprocess.run(cmd, capture_output=True, text=True, env=env)
-        for line in reversed(out.stdout.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                return json.loads(line)
-        last_err = (
-            f"attempt {attempt + 1}: rc={out.returncode} "
-            f"stdout={out.stdout[-300:]!r} stderr={out.stderr[-1500:]!r}"
-        )
-    raise RuntimeError(f"level runner ({cores} cores) produced no JSON; {last_err}")
-
-
-def _busy_loop(_i: int) -> float:
-    t0 = time.time()
-    acc = 0
-    for i in range(20_000_000):
-        acc += i * i
-    return time.time() - t0
-
-
-def _hw_percore_factor(lo: int, hi: int, rounds: int = 3) -> float:
-    """Measured hardware control for single-host scaling runs: per-core
-    slowdown factor when ``hi`` cores are busy vs ``lo`` cores busy
-    (turbo frequency + shared memory bandwidth). On THIS sandbox the
-    fixed busy-loop averages ~1.25s/proc at 8 busy cores but ~1.6s/proc
-    at 32 — pure hardware, identical Python work. A real N->4N cluster
-    adds NODES (per-core frequency constant), so the raw single-host
-    efficiency under-reports engine scaling by exactly this factor.
-    Conservative: min ratio over rounds."""
-    import multiprocessing as mp
-
-    ratios = []
-    for _ in range(rounds):
-        avgs = {}
-        for procs in (lo, hi):
-            with mp.Pool(procs) as p:
-                times = p.map(_busy_loop, range(procs))
-            avgs[procs] = sum(times) / len(times)
-        ratios.append(avgs[hi] / avgs[lo])
-    # a ratio < 1 (per-core FASTER with more busy cores) is physically
-    # impossible and means the probe itself hit a noisy host window —
-    # clamp so the normalization can only correct, never exaggerate.
-    # Upper cap 1.33: the largest 8->32-busy-core slowdown ever measured
-    # on this host across all rounds (BASELINE.md control table), so a
-    # single noisy probe round cannot push the headline past what the
-    # hardware has demonstrably done. min over rounds, then cap.
-    return round(min(1.33, max(1.0, min(ratios))), 3)
-
-
-def _cpu_probe() -> float:
-    """Single-threaded fixed-work probe (~0.1s on a healthy core). The
-    sandbox host throttles the whole VM for minutes at a time (identical
-    Spark jobs measured 7s and 62s with task CPU-seconds inflated 8x, not
-    starved — cpu/run stayed 0.8). The probe timestamps each cycle's host
-    health so efficiency can be computed from clean cycles; raw times are
-    always reported alongside."""
-    t0 = time.time()
-    acc = 0
-    for i in range(2_000_000):
-        acc += i * i
-    return time.time() - t0
 
 
 def main() -> None:
@@ -339,202 +167,22 @@ def main() -> None:
         "cpus": CPUS,
         "bench_schema": 2,
     }
-    detail: dict = {}  # full per-query map + per-cycle samples -> SIDECAR
-    total = 0.0
-    rows = 0
-    times: dict[int, list[float]] = {}
-    probes: dict[int, list[float]] = {}
+    detail: dict = {}  # full per-query map + per-pass samples -> SIDECAR
+    spark = get_spark(cores=CPUS, app="bench")
+    _ensure_corpus(spark, CORPUS_ROWS, corpus_path)
 
-    # materialize the shared corpus once, full-width, before any level runs
-    _run_level(CPUS, 0, corpus_path)
-
-    level_errors: list[str] = []
-
-    def _cycle(cores: int, reps: int, warms: int) -> bool:
-        """One alternating-level cycle. A level that fails BOTH its
-        subprocess attempts is recorded, not fatal: the efficiency
-        estimate is a min over whatever cycles succeeded, and a partial
-        scaling record beats the round-4 incident where one dead 8-core
-        runner aborted the whole bench (driver recorded nothing)."""
-        nonlocal rows, total
-        try:
-            r = _run_level(cores, reps=reps, path=corpus_path, warms=warms)
-        except RuntimeError as exc:
-            level_errors.append(str(exc)[:2000])
-            return False
-        rows = r["rows"]
-        probes.setdefault(cores, []).append(r["probe"])
-        times.setdefault(cores, []).append(min(r["times"]))
-        total += sum(r["times"])
-        return True
-
-    def _clean_min(cores: int) -> float:
-        """Per-level minimum over ALL cycles. Host throttling (minutes-long
-        ~8x slowdown windows on this sandbox) can only make a cycle SLOWER,
-        never faster, so the min is the throttle-robust capability
-        estimate — one clean cycle suffices. (Round 1 gated the min on a
-        per-cycle CPU probe; a probe taken just before a window ended
-        excluded the genuinely-fastest cycle and under-reported scaling
-        efficiency as 0.734 vs the true 0.86. Probes are still recorded,
-        as diagnostics only.)"""
-        return min(times[cores])
-
-    def _pair(lo: int, hi: int) -> dict:
-        t_lo, t_hi = _clean_min(lo), _clean_min(hi)
-        return {
-            "cores_lo": lo,
-            "cores_hi": hi,
-            "rows": rows,
-            "sec_lo": round(t_lo, 3),
-            "sec_hi": round(t_hi, 3),
-            "rows_per_sec_lo": round(rows / t_lo),
-            "rows_per_sec_hi": round(rows / t_hi),
-            "all_secs_lo": [round(t, 3) for t in times[lo]],
-            "all_secs_hi": [round(t, 3) for t in times[hi]],
-            "host_probes_lo": probes[lo],
-            "host_probes_hi": probes[hi],
-            "efficiency_raw": round(t_lo / ((hi / lo) * t_hi), 3),
-        }
-
-    # ---- PRIMARY N->4N pair: the unsaturated regime (local[4] vs
-    # local[16] cpuset nodes on a 32-core host). The north rule scales
-    # EXECUTORS — new nodes, constant per-core frequency and memory
-    # bandwidth — and with at most half the host's cores busy those stay
-    # constant between the two levels here too, so the RAW ratio is the
-    # engine-scaling number with no correction. Cycles alternate core
-    # counts so host-noise windows hit both levels alike; efficiency is
-    # computed from per-level minima (see _clean_min).
-    u_lo, u_hi = (max(1, CPUS // 8), CPUS // 2) if CPUS >= 16 else (1, CPUS)
-    # the "unsaturated N->4N" claim only holds when the hi level leaves
-    # half the host idle AND the pair is actually 4x — at CPUS<16 the pair
-    # degenerates to (1, CPUS) and must not carry the unsaturated label
-    u_is_unsat = (u_hi * 2 <= CPUS) and (u_hi == 4 * u_lo)
-    u_extra = 0
-    if DO_SCALING:
-        u_cycles = max(1, (REPS + 1) // 3)
-        # asymmetric reps: the hi level sits in the denominator TIMES the
-        # core ratio, so one dirty-window hi rep costs 4x what a dirty lo
-        # rep does — and a hi rep is ~3x cheaper to buy (16s vs 52s).
-        for _ in range(u_cycles):
-            _cycle(u_lo, reps=2, warms=1)
-            _cycle(u_hi, reps=3, warms=1)
-        # Adaptive top-up: host contention is ONE-SIDED — another tenant's
-        # load can only make a cycle slower, never faster — so a low ratio
-        # is either engine truth or a dirty window, and extra alternating
-        # cycles only sharpen the min-based capability estimate (they can
-        # move EITHER level's min down, so this is re-sampling, not
-        # cherry-picking; the cycle count is recorded in the sidecar).
-        # Round-4 motivation: one recorded run had all three 16-core
-        # cycles land in a single leftover-process window (16.2-17.0 s vs
-        # the idle-host 14.6 s) and read 0.778 while an idle re-run read
-        # 0.895 — three cycles under-sample a multi-minute dirty window.
-        def _eff(lo: int, hi: int) -> float:
-            if lo not in times or hi not in times:
-                return 0.0
-            return _clean_min(lo) / ((hi / lo) * _clean_min(hi))
-
-        # Top-up fires on BOTH suspicious sides: < 0.82 usually means a
-        # dirty hi level; > 1.0 (superlinear strong scaling is not a thing
-        # for this job) means EVERY lo cycle was dirty — one recorded run
-        # read 1.019 with lo minima 64.8 s vs the established clean ~52 s
-        # and all three lo probes degraded. Extra cycles can only lower a
-        # level's min, so either trigger moves the estimate toward truth.
-        while u_extra < MAX_EXTRA and not (0.82 <= _eff(u_lo, u_hi) <= 1.0):
-            _cycle(u_lo, reps=2, warms=1)
-            _cycle(u_hi, reps=3, warms=1)
-            u_extra += 1
-
-    # ---- SECONDARY pair: the saturated 8 -> 32 regime (plus the full-
-    # width runs the absolute-throughput headline needs). At 32 busy
-    # cores this single socket runs every core ~1.3x slower (bandwidth +
-    # turbo), which adding NODES does not do — raw is recorded alongside
-    # the hw-normalized value; see module docstring and BASELINE.md.
-    s_lo = max(1, CPUS // 4)
-    if DO_SAT or not DO_SCALING:
-        s_cycles = max(1, (REPS + 1) // 4) if DO_SCALING else 1
-        # honor BENCH_REPS in the throughput-only path too (a REPS=1 smoke
-        # run should not pay 4 timed + 2 warm full passes)
-        full_reps = 4 if DO_SCALING else max(1, min(4, REPS))
-        full_warms = 2 if DO_SCALING else (1 if REPS <= 2 else 2)
-        for _ in range(s_cycles):
-            if DO_SCALING:
-                _cycle(s_lo, reps=2, warms=1)
-            _cycle(CPUS, reps=full_reps, warms=full_warms)
-
-    if not times:
-        # every subprocess level failed twice (pathological host): measure
-        # the full-width throughput in-process so the record still carries
-        # a pipeline number rather than nothing at all.
-        spark_fb = _new_spark(CPUS)
-        rows, fb_times = _pipeline_run(spark_fb, corpus_path, reps=2, warms=1)
-        spark_fb.stop()
-        times[CPUS] = [min(fb_times)]
-        total += sum(fb_times)
-    t_full = _clean_min(CPUS) if CPUS in times else _clean_min(u_hi)
+    rows, times = _pipeline_run(spark, corpus_path, reps=REPS, warms=WARMS)
+    total = sum(times)
+    # min over the timed passes: host contention can only make a pass
+    # slower, never faster, so the fastest pass is the capability estimate
+    t_best = min(times)
     result["pipeline"] = {
         "rows": rows,
-        "sec": round(t_full, 3),
-        "rows_per_sec": round(rows / t_full) if t_full else None,
-        "cores": CPUS if CPUS in times else u_hi,
+        "sec": t_best,
+        "rows_per_sec": round(rows / t_best) if t_best else None,
+        "cores": CPUS,
     }
-    def _compact_pair(p: dict) -> dict:
-        """The stdout line carries the pair WITHOUT the per-cycle sample
-        arrays (those live in the sidecar) — see module docstring."""
-        keep = (
-            "cores_lo",
-            "cores_hi",
-            "rows",
-            "sec_lo",
-            "sec_hi",
-            "rows_per_sec_lo",
-            "rows_per_sec_hi",
-            "efficiency_raw",
-            "regime",
-            "hw_percore_factor",
-            "efficiency_hw_normalized",
-        )
-        return {k: p[k] for k in keep if k in p}
-
-    if level_errors:
-        detail["level_errors"] = level_errors
-        result["level_errors_n"] = len(level_errors)
-
-    if DO_SCALING and u_lo in times and u_hi in times:
-        prim = _pair(u_lo, u_hi)
-        prim["extra_cycles"] = u_extra
-        if u_is_unsat:
-            prim["regime"] = "unsaturated"
-            prim["regime_note"] = (
-                "<=half the host cores busy at either level: per-core "
-                "frequency/bandwidth constant across levels, as in a real "
-                "N->4N executor scale-up; raw ratio needs no correction"
-            )
-        else:
-            prim["regime"] = f"{u_lo}->{u_hi} cores ({u_hi // u_lo}x)"
-            prim["regime_note"] = (
-                f"NOT the unsaturated 4x pair: hi level uses {u_hi} of the "
-                f"{CPUS} allowed cores; interpret the raw ratio against the "
-                f"actual {u_hi / u_lo:g}x core growth"
-            )
-        detail["scaling"] = prim
-        result["scaling"] = _compact_pair(prim)
-    if DO_SCALING and DO_SAT and CPUS in times and s_lo in times:
-        sat = _pair(s_lo, CPUS)
-        hw = _hw_percore_factor(s_lo, CPUS)
-        sat["regime"] = "saturated"
-        sat["regime_note"] = (
-            f"{CPUS}/{CPUS} cores busy at the hi level: single-socket "
-            "busy-core falloff — measured 1.15-1.33x per-core vs 8 busy "
-            "— taxes the wide level; a multi-node 4N cluster does not "
-            "see this, so raw under-reports engine scaling here"
-        )
-        sat["hw_percore_factor"] = hw
-        sat["efficiency_hw_normalized"] = round(sat["efficiency_raw"] * hw, 3)
-        detail["scaling_saturated"] = sat
-        result["scaling_saturated"] = _compact_pair(sat)
-
-    # ---- headline queries + fan-out write in a fresh session ----
-    spark = _new_spark(CPUS)
+    detail["pipeline_secs"] = times
 
     # true end-to-end including the per-sink fan-out write (token arrays
     # preserved into the sinks per the per-row invariant), laid out as the
@@ -556,12 +204,11 @@ def main() -> None:
             _control.with_partition_id(spark.read.parquet(corpus_path), 4 * CPUS),
         )
         # Untimed warm pass (same discipline as _pipeline_run's warms): the
-        # fanout is the FIRST job in this fresh session since the scaling
-        # levels moved to their own cpuset subprocesses, and a cold JVM pays
-        # JIT/codegen + cold page cache on it — measured 120s cold vs ~50s
-        # warm for the IDENTICAL write. The warm pass materializes the full
-        # sink width through a noop sink (no disk, no shuffle), compiling
-        # the same generated code and heating the corpus file cache.
+        # throughput passes never project the full sink width, and a first
+        # run of this plan pays its JIT/codegen — measured 120s cold vs ~50s
+        # warm for the IDENTICAL write in a fresh JVM. The warm pass
+        # materializes the full sink width through a noop sink (no disk, no
+        # shuffle), compiling the same generated code.
         routed.select(
             *[c for c in _sinks.SINK_COLUMNS if c in routed.columns],
             "sink",
@@ -589,6 +236,8 @@ def main() -> None:
     prep: dict[str, float] = {}
     for step, run in (
         ("routed", lambda: entrymod._routed(spark, SF_DIR).count()),
+        # also builds and checkpoints its input, the shared _minhash_sigs
+        # table, so the signature build is charged to this line item
         ("neardup_pairs", lambda: entrymod._neardup_pairs(spark, SF_DIR).count()),
         (
             "embedding_pairs",
@@ -623,31 +272,13 @@ def main() -> None:
 
     qs = entrymod.queries()
     qtimes: dict[str, float] = {}
-    first_run: dict[str, float] = {}
-    # Best-of-two with a JVM-GC settle for anything over RETRY_SEC: the
-    # round-4 record showed ~20 UNCHANGED queries reading 1.5-7x slower
-    # than round 3 purely from heap pressure late in the 156-query
-    # single-session sweep (embedding_neardup_exact 11.4s recorded vs
-    # 1.1-1.4s warm re-measured; multimodal_decode 9.0s vs 1.1s clean).
-    # The retry only fires on the slow tail, so the sweep stays ~O(one
-    # pass) for the sub-second majority; first-run raw timings go to the
-    # sidecar for round-over-round transparency.
-    RETRY_SEC = 1.0
     for name in HEADLINE if HEADLINE is not None else list(qs):
         if name not in qs:
             continue
         t0 = time.time()
         _force(qs[name](spark, SF_DIR))
-        t1 = round(time.time() - t0, 3)
-        first_run[name] = t1
-        if t1 > RETRY_SEC:
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.time()
-            _force(qs[name](spark, SF_DIR))
-            t1 = min(t1, round(time.time() - t0, 3))
-        qtimes[name] = t1
+        qtimes[name] = round(time.time() - t0, 3)
     detail["queries"] = qtimes
-    detail["queries_first_run"] = first_run
     total += sum(qtimes.values())
     result["value"] = round(total, 3)
     # compact line: only the slowest 8 queries inline; the full map is in
@@ -659,10 +290,7 @@ def main() -> None:
     result["queries_total_sec"] = round(sum(qtimes.values()), 3)
     result["queries_file"] = SIDECAR
 
-    detail.update(
-        {k: v for k, v in result.items() if k not in ("queries", "scaling",
-                                                      "scaling_saturated")}
-    )
+    detail.update({k: v for k, v in result.items() if k != "queries"})
     with open(SIDECAR, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
 
@@ -675,15 +303,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if "--level" in sys.argv:
-        import argparse
-
-        p = argparse.ArgumentParser()
-        p.add_argument("--level", type=int, required=True)
-        p.add_argument("--reps", type=int, default=2)
-        p.add_argument("--corpus", default=os.path.join(CACHE, f"corpus_{CORPUS_ROWS}"))
-        p.add_argument("--warms", type=int, default=1)
-        a = p.parse_args()
-        _level_main(a.level, a.reps, a.corpus, a.warms)
-    else:
-        main()
+    main()

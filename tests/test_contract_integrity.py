@@ -96,3 +96,35 @@ def test_oracle_outputs_bind_to_no_decimal_types():
             if "DECIMAL" in ts or "HUGEINT" in ts:
                 bad.append(f"{name}.{col}: {ts} (wrap in CAST(... AS BIGINT))")
     assert not bad, "uncast aggregate types in oracle_sql():\n" + "\n".join(bad)
+
+
+def test_memo_builds_once_and_keeps_one_sf_dir_per_session(spark, monkeypatch):
+    """The contract's shared views are memoized per (session, sf_dir):
+    ``build`` runs once per key, a session keeps only its latest sf_dir
+    (the IVF index directory included), and ``_routed`` hands every
+    consumer the identical DataFrame."""
+    import __spark_entry__ as entrymod
+
+    # a private memo table and a recording index build, so the shared
+    # session's real memo entries are neither read nor disturbed
+    monkeypatch.setattr(entrymod, "_MEMO", {})
+    built: list[str] = []
+    monkeypatch.setattr(
+        entrymod.simsearch, "build_ivf_index", lambda emb, path: built.append(path)
+    )
+
+    calls: list[str] = []
+    first = entrymod._memo(spark, "/sf_a", "probe", lambda: calls.append("a") or "A")
+    again = entrymod._memo(spark, "/sf_a", "probe", lambda: calls.append("b") or "B")
+    assert (first, again, calls) == ("A", "A", ["a"])
+
+    sf_a, sf_b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
+    path_a = entrymod._ivf_index_path(spark, sf_a)
+    assert entrymod._ivf_index_path(spark, sf_a) == path_a
+    assert built == [path_a]
+    entrymod._ivf_index_path(spark, sf_b)
+    # sf_b evicted sf_a's index, so asking for sf_a again rebuilds it
+    assert entrymod._ivf_index_path(spark, sf_a) != path_a
+    assert len(built) == 3
+
+    assert entrymod._routed(spark, sf_a) is entrymod._routed(spark, sf_a)
