@@ -650,9 +650,9 @@ def q_progress_guard(spark, sf_dir):
     ev = _load(spark, sf_dir, "events").select(
         "event_id", F.expr(_PROGRESS_LINE).alias("line")
     )
-    return control.progress_line_summary(
-        ev, "line", expected=2500, retry=1000
-    ).select("event_id", "n_ints", "lines_parsed", "status")
+    return control.progress_line_summary(ev, expected=2500, retry=1000).select(
+        "event_id", "n_ints", "lines_parsed", "status"
+    )
 
 
 # TZ-free rendering of an epoch (DATE arithmetic + integer math only — the
@@ -671,13 +671,11 @@ def q_epoch_timestamps(spark, sf_dir):
     roundtrip unix_timestamp(timestamp_seconds(e)) == e is asserted as a
     column (instant->instant, TZ-independent); the human rendering uses
     TZ-free date arithmetic."""
-    from logspark import control
-
     e = "CAST(1700000000 AS BIGINT) + (event_id * 7919) % 100000000"
     ev = _load(spark, sf_dir, "events").select(
         "event_id", F.expr(e).alias("epoch")
     )
-    ev = control.with_created_at(ev, "epoch")
+    ev = ev.withColumn("created_at", F.timestamp_seconds(F.col("epoch")))
     return ev.select(
         "event_id",
         "epoch",
@@ -1559,7 +1557,7 @@ def q_geo_ua_rollup(spark, sf_dir):
     r = _routed(spark, sf_dir)
     g = enrich.with_geo(r, spark)
     return (
-        g.withColumn("ua_class", enrich.ua_class("user_agent"))
+        g.withColumn("ua_class", enrich.ua_class())
         .groupBy("region", "ua_class", "route")
         .agg(F.count("*").alias("cnt"))
     )
@@ -2140,7 +2138,7 @@ def q_ip_anonymize(spark, sf_dir):
 
     r = _routed(spark, sf_dir).filter(F.col("parsed_ok"))
     return (
-        r.withColumn("ip_anon", enrich.anonymize_ip("ip"))
+        r.withColumn("ip_anon", enrich.anonymize_ip())
         .groupBy("source")
         .agg(
             F.count("*").alias("n_rows"),
@@ -2519,10 +2517,13 @@ SELECT source, CAST(dd AS INT) AS day, CAST(hh AS INT) AS hour,
          > COUNT(*) * 1000 AS breached
 FROM ({{R}}) r WHERE NOT corrupt
 GROUP BY source, CAST(dd AS INT), CAST(hh AS INT)""".replace("{R}", R),
-        # TZ-free minute buckets from the parsed timestamp FIELDS
+        # TZ-free minute buckets from the parsed timestamp FIELDS, with
+        # year and month folded in as rules.bot_velocity folds them
         "bot_velocity": f"""
 WITH m AS (SELECT ip,
-                  (CAST(dd AS INT) * 24 + CAST(hh AS INT)) * 60
+                  (((CAST(substr(iso_date, 1, 4) AS INT) * 12
+                     + CAST(substr(iso_date, 6, 2) AS INT)) * 32
+                    + CAST(dd AS INT)) * 24 + CAST(hh AS INT)) * 60
                     + CAST(mi AS INT) AS minute_bucket
            FROM ({{R}}) r WHERE NOT corrupt),
 pm AS (SELECT ip, minute_bucket, COUNT(*) AS n_in_min

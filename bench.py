@@ -22,7 +22,7 @@ off ``bench_schema`` to avoid mixing definitions.
 
 The headline metric mirrors BASELINE.json: end-to-end parsed+routed
 sequences/sec reading a materialized tokenized-sequence table
-(doc_id, tokens:array<int32>, n_tok, source) — detokenize (Arrow) ->
+(doc_id, tokens:array<int32>, n_tok, source) — detokenize (JVM codec) ->
 format-detect -> parse -> enrich -> route -> per-(source,route,sink)
 aggregate. One Spark session builds the corpus, times that pipeline,
 times the fan-out write, then times every driver query.

@@ -14,8 +14,8 @@ Design goals (BASELINE.json north_rule):
     Python;
   * explicit hash partitioning on doc_id, AQE skew-join;
   * per-partition lineage + accumulator/observe metrics on every stage;
-  * resumable from checkpoint state (anti-join vs committed partitions);
-  * >=0.8 throughput scaling efficiency from N to 4N cores.
+  * resumable from checkpoint state (a literal ``part_id`` filter that
+    skips the partitions the control store holds as LOADED).
 
 Beyond the reference, the training-data operator suite (per-round brief):
 dedup (exact / shingle-MinHash-LSH verified / SimHash Hamming-ball /

@@ -39,15 +39,18 @@ CAMPAIGN_NAME_PARAMS = ["pk_campaign", "mtm_campaign", "utm_campaign"]
 CAMPAIGN_SOURCE_PARAMS = ["pk_source", "mtm_source", "utm_source"]
 CAMPAIGN_MEDIUM_PARAMS = ["pk_medium", "mtm_medium", "utm_medium"]
 
+# rows in the trending-pages report (the oracle's LIMIT 10)
+TRENDING_TOP_K = 10
 
-def first_param_expr(params: list, query_col: str = "query") -> F.Column:
-    """First non-empty value among ``params`` in the raw query string —
+
+def first_param_expr(params: list) -> F.Column:
+    """First non-empty value among ``params`` in the raw ``query`` string —
     one anchored regex per name, `(?:^|&)name=([^&]*)`, coalesced in
     priority order; NULL when no param matches or the value is empty
     (all JVM-side in codegen)."""
     vals = [
         F.nullif(
-            F.regexp_extract(query_col, rf"(?:^|&){p}=([^&]*)", 1), F.lit("")
+            F.regexp_extract("query", rf"(?:^|&){p}=([^&]*)", 1), F.lit("")
         )
         for p in params
     ]
@@ -89,9 +92,9 @@ def site_search_keywords(routed: DataFrame) -> DataFrame:
     )
 
 
-def trending_paths(routed: DataFrame, k: int = 10) -> DataFrame:
-    """Day-over-day trending pages: the k stems with the largest absolute
-    hit growth vs their previous active day.
+def trending_paths(routed: DataFrame) -> DataFrame:
+    """Day-over-day trending pages: the ``TRENDING_TOP_K`` stems with the
+    largest absolute hit growth vs their previous active day.
 
     Matomo's UI sorts the Pages report by today's hits; growth ranking is
     the operations view (what broke out / what died). Per (stem, day)
@@ -121,4 +124,4 @@ def trending_paths(routed: DataFrame, k: int = 10) -> DataFrame:
     ).withColumn("growth", F.col("n_hits") - F.col("prev_hits"))
     return g.orderBy(
         F.desc("growth"), F.asc("day"), F.asc("stem")
-    ).limit(k)
+    ).limit(TRENDING_TOP_K)

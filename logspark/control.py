@@ -65,21 +65,13 @@ def retry_adjusted_progress(lines_parsed, retry: int = RETRY_DIFF_LINES):
     return adj.alias("adjusted_lines"), status.alias("retry_status")
 
 
-def with_created_at(df: DataFrame, epoch_col: str, out: str = "created_at") -> DataFrame:
-    """X9/S2 parity: epoch-seconds metadata -> TIMESTAMP column via
-    ``timestamp_seconds`` (the reference stamps LogFile.created_at from
-    ``os.stat(file).st_ctime``, /root/reference/libs/lib_database.py:79)."""
-    return df.withColumn(out, F.timestamp_seconds(F.col(epoch_col)))
-
-
 def progress_line_summary(
     df: DataFrame,
-    line_col: str = "line",
     expected: int = 120_000,
     retry: int = RETRY_DIFF_LINES,
 ) -> DataFrame:
     """X8 progress-guard parity (/root/reference/libs/lib_summary.py:70-91):
-    a failure-summary line is trusted ONLY if it contains EXACTLY four
+    a failure-summary ``line`` is trusted ONLY if it contains EXACTLY four
     integers (the guard); the FIRST integer is the lines-parsed cursor.
     Classification then follows the reference's retry rules: LOADED when
     the cursor is within ±1 of expected, else ``retry_adjusted_progress``:
@@ -89,11 +81,9 @@ def progress_line_summary(
     Appends (n_ints, lines_parsed, status). Pure column expressions —
     JVM-side, no shuffle; the regexp runs twice per row (count + first
     match), both inside whole-stage codegen."""
-    n_ints = F.size(
-        F.expr(f"regexp_extract_all({line_col}, '[0-9]+', 0)")
-    )
+    n_ints = F.size(F.expr("regexp_extract_all(line, '[0-9]+', 0)"))
     first = F.expr(
-        f"CAST(nullif(regexp_extract({line_col}, '([0-9]+)', 1), '') AS BIGINT)"
+        "CAST(nullif(regexp_extract(line, '([0-9]+)', 1), '') AS BIGINT)"
     )
     guarded = n_ints == 4
     loaded = guarded & first.between(expected - 1, expected + 1)
@@ -115,7 +105,7 @@ def progress_line_summary(
     )
 
 
-def with_partition_id(corpus: DataFrame, num_partitions: int = 64) -> DataFrame:
+def with_partition_id(corpus: DataFrame, num_partitions: int) -> DataFrame:
     """Explicit hash partitioning on doc_id (north_rule). Deterministic,
     content-only (xxhash64) — never depends on physical layout."""
     return corpus.withColumn(

@@ -40,14 +40,15 @@ def geo_table(spark: SparkSession) -> DataFrame:
     return local_table(spark, GEO_RANGES, "lo int, hi int, region string")
 
 
-def first_octet(ip_col: str = "ip") -> Column:
-    return F.split(F.col(ip_col), "\\.").getItem(0).cast("int")
+def first_octet() -> Column:
+    return F.split(F.col("ip"), "\\.").getItem(0).cast("int")
 
 
-def with_geo(df: DataFrame, spark: SparkSession, ip_col: str = "ip") -> DataFrame:
-    """Append ``region`` via broadcast range lookup (BETWEEN join)."""
+def with_geo(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """Append ``region`` of the ``ip`` column via broadcast range lookup
+    (BETWEEN join)."""
     g = F.broadcast(geo_table(spark))
-    o = first_octet(ip_col)
+    o = first_octet()
     return df.withColumn("_oct", o).join(
         g,
         (F.col("_oct") >= F.col("lo")) & (F.col("_oct") <= F.col("hi")),
@@ -55,8 +56,8 @@ def with_geo(df: DataFrame, spark: SparkSession, ip_col: str = "ip") -> DataFram
     ).drop("_oct", "lo", "hi")
 
 
-def ua_class(ua_col: str = "ua") -> Column:
-    ua = F.lower(F.col(ua_col))
+def ua_class() -> Column:
+    ua = F.lower(F.col("user_agent"))
     return (
         F.when(
             ua.like("%bot%") | ua.like("%crawler%") | ua.like("%spider%"),
@@ -68,9 +69,9 @@ def ua_class(ua_col: str = "ua") -> Column:
     )
 
 
-def anonymize_ip(ip_col: str = "ip", keep_octets: int = 3) -> Column:
+def anonymize_ip(keep_octets: int = 3) -> Column:
     """Matomo-style IP anonymization (privacy.ipAddressMaskLength): zero
-    the trailing 4-``keep_octets`` octets of an IPv4 address so stored
+    the trailing 4-``keep_octets`` octets of the ``ip`` column so stored
     hits are k-anonymous at the subnet level. Matomo's tracker does this
     server-side before any visit is persisted; a training-data pipeline
     does it before logs enter the corpus (PII scrubbing).
@@ -83,11 +84,11 @@ def anonymize_ip(ip_col: str = "ip", keep_octets: int = 3) -> Column:
             f"keep_octets must be in [0, 4], got {keep_octets} "
             "(mask length N maps to keep_octets = 4 - N)"
         )
-    parts = F.split(F.col(ip_col), "\\.")
+    parts = F.split(F.col("ip"), "\\.")
     kept = [parts.getItem(i) for i in range(keep_octets)]
     zeros = [F.lit("0")] * (4 - keep_octets)
     return F.when(
-        F.col(ip_col).isNull(), F.lit(None).cast("string")
+        F.col("ip").isNull(), F.lit(None).cast("string")
     ).otherwise(F.concat_ws(".", *kept, *zeros))
 
 
@@ -114,9 +115,9 @@ def search_engine_table(spark: SparkSession) -> DataFrame:
     return local_table(spark, SEARCH_ENGINES, "host string, engine string")
 
 
-def referrer_host(ref_col: str = "referrer") -> Column:
-    """Host part of the referrer URL — one anchored regex, JVM-side."""
-    h = F.regexp_extract(F.col(ref_col), r"^https?://([^/?#]+)", 1)
+def referrer_host() -> Column:
+    """Host part of the ``referrer`` URL — one anchored regex, JVM-side."""
+    h = F.regexp_extract(F.col("referrer"), r"^https?://([^/?#]+)", 1)
     return F.when(h == "", F.lit(None).cast("string")).otherwise(h)
 
 

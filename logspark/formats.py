@@ -81,15 +81,16 @@ def detect_format(line: Column) -> Column:
     )
 
 
-def with_records(df: DataFrame, line_col: str = "line") -> DataFrame:
-    """Projection 1: fmt; projection 2: shared per-format record columns.
+def with_records(df: DataFrame) -> DataFrame:
+    """Projection 1: fmt of the ``line`` column; projection 2: shared
+    per-format record columns.
 
     rec_n — NCSA groups via ONE regexp_replace pass + split
     rec_s — space-split fields (iis / w3c_extended)
     rec_t — tab-split fields (cloudfront)
     j     — parsed JSON struct (nginx_json), ONE from_json per row
     """
-    line = F.col(line_col)
+    line = F.col("line")
     df = df.withColumn("fmt", detect_format(line))
     fmt = F.col("fmt")
     return df.withColumns(

@@ -67,17 +67,16 @@ def compile_grok(template: str) -> tuple[str, list[str]]:
     return "".join(out), fields
 
 
-def grok_extract(
-    df: DataFrame, template: str, line_col: str = "line", anchored: bool = True
-) -> DataFrame:
-    """Append one column per named grok field (empty string on no-match,
-    regexp_extract semantics). One compiled regex evaluated per group —
-    Catalyst CSEs the shared match machinery; all JVM-side."""
+def grok_extract(df: DataFrame, template: str) -> DataFrame:
+    """Append one column per named grok field of the ``line`` column (empty
+    string on no-match, regexp_extract semantics). The match is anchored at
+    both ends, so it is also the format dispatch. One compiled regex
+    evaluated per group — Catalyst CSEs the shared match machinery; all
+    JVM-side."""
     regex, fields = compile_grok(template)
-    if anchored:
-        regex = f"^{regex}$"
+    regex = f"^{regex}$"
     cols: list[Column] = [
-        F.regexp_extract(F.col(line_col), regex, i + 1).alias(f)
+        F.regexp_extract(F.col("line"), regex, i + 1).alias(f)
         for i, f in enumerate(fields)
     ]
     return df.select("*", *cols)
@@ -142,7 +141,7 @@ CLOUDFRONT_TEMPLATE = (
 )
 
 
-def nginx_json_extract(df: DataFrame, line_col: str = "line") -> DataFrame:
+def nginx_json_extract(df: DataFrame) -> DataFrame:
     """The nginx-JSON member of the format taxonomy. JSON is not
     regex-shaped — a grok template cannot parse nested quoting/escapes
     correctly — so this dispatch arm is `from_json` against the documented
@@ -154,7 +153,7 @@ def nginx_json_extract(df: DataFrame, line_col: str = "line") -> DataFrame:
     format-agnostic."""
     from logspark import formats
 
-    j = F.from_json(F.col(line_col), formats.NGINX_JSON_SCHEMA)
+    j = F.from_json(F.col("line"), formats.NGINX_JSON_SCHEMA)
     req = F.split(j["request"], " ")
     return df.select(
         "*",

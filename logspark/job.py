@@ -105,16 +105,15 @@ def main(argv: list[str] | None = None) -> int:
         from logspark import enrich
         from logspark import tokens as tokmod
 
-        masked = enrich.anonymize_ip("ip", keep_octets=4 - args.anonymize_ip)
+        masked = enrich.anonymize_ip(keep_octets=4 - args.anonymize_ip)
         # PII closure: tokens ARE the raw line (per-character code points),
-        # so the raw address must be scrubbed there too — detokenize,
-        # literal-replace every occurrence of the raw ip with the masked
-        # form, retokenize. All codegen'd column math in the same narrow
-        # pass; rows with no parsed IP keep their tokens verbatim (the
-        # per-row token-equality invariant holds for every non-PII row).
-        scrubbed_line = F.replace(
-            tokmod.detokenize_expr("tokens"), F.col("ip"), masked
-        )
+        # so the raw address must be scrubbed there too — literal-replace
+        # every occurrence of the raw ip in the already detokenized line
+        # with the masked form, retokenize. All codegen'd column math in
+        # the same narrow pass; rows with no parsed IP keep their tokens
+        # verbatim (the per-row token-equality invariant holds for every
+        # non-PII row).
+        scrubbed_line = F.replace(F.col("line"), F.col("ip"), masked)
         routed = (
             routed.withColumn(
                 "tokens",

@@ -16,12 +16,12 @@ from logspark import formats, rules
 RECORD_COLS = ["rec_n", "rec_s", "rec_t", "j"]
 
 
-def parse_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
+def parse_lines(df: DataFrame) -> DataFrame:
     """df(line, ...) -> df + (fmt, ip, ts_str, ts, method, path, stem, query,
     ext, status, nbytes, referrer, user_agent, parsed_ok).
 
     Carries every input column through untouched (token-array invariant)."""
-    df = formats.with_records(df, line_col)
+    df = formats.with_records(df)
     df = df.withColumns(formats.field_columns()).drop(*RECORD_COLS)
     df = df.withColumns(
         {

@@ -16,24 +16,18 @@ from pyspark.sql import functions as F
 from logspark import gen_sql, metrics, parse, route, tokens
 
 
-def build_corpus_df(
-    spark: SparkSession, rel: str, with_token_arrays: bool = True
-) -> DataFrame:
-    """Materialize the deterministic corpus (doc_id, source, tokens, n_tok[,
-    line]) from a portable-SQL relation (documents table or range())."""
+def build_corpus_df(spark: SparkSession, rel: str) -> DataFrame:
+    """Materialize the deterministic corpus (doc_id, source, tokens, n_tok)
+    from a portable-SQL relation (documents table or range())."""
     df = spark.sql(gen_sql.corpus_sql(rel)).select("doc_id", "source", "line")
-    if with_token_arrays:
-        df = tokens.with_tokens(df, "line").drop("line")
-    return df
+    return tokens.with_tokens(df).drop("line")
 
 
 def detokenized(df: DataFrame) -> DataFrame:
     """Attach the reconstructed ``line`` column with the pure-JVM expression
     codec (``tokens.detokenize_expr``): it stays in whole-stage codegen and
     never crosses the Python boundary."""
-    if "line" in df.columns:
-        return df
-    return df.withColumn("line", tokens.detokenize_expr("tokens"))
+    return df.withColumn("line", tokens.detokenize_expr())
 
 
 def routed_hits(
@@ -48,21 +42,11 @@ def routed_hits(
     the engine-native accumulator metrics required by north_rule.
     """
     df = detokenized(corpus)
-    df = parse.parse_lines(df, "line")
+    df = parse.parse_lines(df)
     df = parse.enriched_ext_kind(df, spark)
-    df = df.withColumn(
-        "route",
-        route.route_expr(
-            F.col("parsed_ok"),
-            F.col("status"),
-            F.col("user_agent"),
-            F.col("stem"),
-            F.col("query"),
-            F.col("source"),
-            F.col("ts"),
-            F.col("ext_kind"),
-        ),
-    ).withColumn("sink", route.sink_expr(F.col("route")))
+    df = df.withColumn("route", route.route_expr()).withColumn(
+        "sink", route.sink_expr(F.col("route"))
+    )
     if observation is not None:
         df = df.observe(observation, *metrics.observed_columns())
     return df

@@ -34,35 +34,26 @@ ROUTE_TO_SINK = {
 ROUTES = list(ROUTE_TO_SINK)
 
 
-def route_expr(
-    parsed_ok: Column,
-    status: Column,
-    user_agent: Column,
-    stem: Column,
-    query: Column,
-    source: Column,
-    ts: Column,
-    ext_kind: Column,
-) -> Column:
-    """First-match-wins route CASE (lazy per-row evaluation; a row stops at
-    its first matching class, mirroring import_logs' rule order). The
-    always-invalid source set fires FIRST — the reference marks those files
-    INVALID at discovery, before any parsing (values.py:88-95,
-    lib_database.py:87-90)."""
+def route_expr() -> Column:
+    """First-match-wins route CASE over the parsed, enriched hit columns
+    (lazy per-row evaluation; a row stops at its first matching class,
+    mirroring import_logs' rule order). The always-invalid source set fires
+    FIRST — the reference marks those files INVALID at discovery, before any
+    parsing (values.py:88-95, lib_database.py:87-90)."""
     return (
-        F.when(rules.is_invalid_source(source), "invalid")
-        .when(~parsed_ok, "invalid")
-        .when(status >= 400, "http_error")
-        .when(status >= 300, "redirect")
-        .when(rules.is_bot(user_agent), "bot")
-        .when(ext_kind == "static", "static")
+        F.when(rules.is_invalid_source(F.col("source")), "invalid")
+        .when(~F.col("parsed_ok"), "invalid")
+        .when(F.col("status") >= 400, "http_error")
+        .when(F.col("status") >= 300, "redirect")
+        .when(rules.is_bot(F.col("user_agent")), "bot")
+        .when(F.col("ext_kind") == "static", "static")
         .when(
-            rules.is_excluded_path(stem)
-            | rules.date_conditional_filtered(source, ts),
+            rules.is_excluded_path(F.col("stem"))
+            | rules.date_conditional_filtered(F.col("source"), F.col("ts")),
             "filtered",
         )
-        .when(ext_kind == "download", "download")
-        .when(query.startswith("to=http"), "outlink")
+        .when(F.col("ext_kind") == "download", "download")
+        .when(F.col("query").startswith("to=http"), "outlink")
         .otherwise("visit")
     )
 

@@ -79,12 +79,18 @@ def date_conditional_filtered(source: Column, ts: Column) -> Column:
     return (source == "varnish02") & (F.dayofmonth(ts) > 20)
 
 
-def bot_velocity(routed: DataFrame, threshold: int = 5) -> DataFrame:
+# hits by one IP within one wall-clock minute above which bot_velocity
+# flags it (the oracle's `MAX(n_in_min) > 5`)
+BOT_BURST_PER_MINUTE = 5
+
+
+def bot_velocity(routed: DataFrame) -> DataFrame:
     """Rate-based bot detection: per-IP request-velocity profile with a
     burst flag — the behavioral complement to the UA-keyword taxonomy
     (`is_bot`). Matomo's importer only knows UA/host exclusion rules; a
     scraper with a clean UA is invisible to it. Velocity isn't: any IP
-    exceeding ``threshold`` hits within one wall-clock minute is flagged.
+    exceeding ``BOT_BURST_PER_MINUTE`` hits within one wall-clock minute is
+    flagged.
 
     Per IP (parsed hits only): total hits, distinct active minutes,
     the hottest minute's hit count, and ``flagged``. The minute bucket
@@ -92,9 +98,7 @@ def bot_velocity(routed: DataFrame, threshold: int = 5) -> DataFrame:
     discipline as the visit model — never an instant through a session
     zone), with year and month folded in so hits from the same
     day-of-month of DIFFERENT months never collapse into one wall-clock
-    minute (ADVICE r4 — the bucket value is internal grouping state,
-    never an output column, so the formula only has to distinguish
-    minutes, not match the oracle's numeric value).
+    minute. The DuckDB oracle folds year and month in the same way.
 
     Shape at scale: two map-side-combinable hash aggs — (ip, minute)
     then ip. A hot IP (the thing being measured) concentrates count
@@ -128,6 +132,6 @@ def bot_velocity(routed: DataFrame, threshold: int = 5) -> DataFrame:
             "total_hits",
             "n_active_minutes",
             "max_per_minute",
-            (F.col("max_per_minute") > threshold).alias("flagged"),
+            (F.col("max_per_minute") > BOT_BURST_PER_MINUTE).alias("flagged"),
         )
     )

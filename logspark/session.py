@@ -61,18 +61,17 @@ def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
 def get_spark(
     cores: int | None = None,
     app: str = "logspark",
-    shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     cores: local[] thread count; defaults to ``default_parallelism()``.
-    shuffle_partitions: defaults to 2x cores (good spill/parallelism balance
-    in local mode; on a real cluster this is sized to target ~128MB shuffle
-    blocks per partition instead).
+    Shuffle partitions are 2x cores, at least 8 (good spill/parallelism
+    balance in local mode; on a real cluster this is sized to target
+    ~128MB shuffle blocks per partition instead).
     """
     n = cores or default_parallelism()
-    sp = shuffle_partitions or max(8, 2 * n)
+    sp = max(8, 2 * n)
     b = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app)

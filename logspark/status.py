@@ -98,7 +98,18 @@ def guarded_upsert(existing: DataFrame, updates: DataFrame) -> DataFrame:
     )
 
 
-def slo_error_budget(routed: DataFrame, target_ppm: int = 1000) -> DataFrame:
+# the SLO's allowed error fraction in ppm: 1000 ppm is a 99.9% availability
+# target (the oracles' `* 1000`)
+SLO_TARGET_PPM = 1000
+
+
+def slo_breached() -> Column:
+    """The day's (or hour's) 5xx share of ``n_req`` exceeds
+    ``SLO_TARGET_PPM``; integer-exact over the ``n_5xx``/``n_req`` counts."""
+    return F.expr(f"n_5xx * 1000000 > n_req * {SLO_TARGET_PPM}").alias("breached")
+
+
+def slo_error_budget(routed: DataFrame) -> DataFrame:
     """Per (source, day) availability vs an SLO error budget, all-integer.
 
     SRE view of the reference's per-day status ledger (lib_status tracks
@@ -106,10 +117,8 @@ def slo_error_budget(routed: DataFrame, target_ppm: int = 1000) -> DataFrame:
     source and ISO day, request count, 5xx count, availability in ppm,
     and the budget-burn rate in milli-units of the allowed error budget
     (``burn_milli`` = 1000 means errors exactly consumed the day's
-    budget; >1000 means the SLO is breached, also surfaced as a bool).
-
-    target_ppm is the ALLOWED error fraction in ppm (1000 ppm = 99.9%
-    availability target).
+    budget of ``SLO_TARGET_PPM``; >1000 means the SLO is breached, also
+    surfaced as a bool).
 
     Exactness: every derived value is floor-division of two exact BIGINT
     products, so any engine lands on identical rows — no float surface.
@@ -132,10 +141,8 @@ def slo_error_budget(routed: DataFrame, target_ppm: int = 1000) -> DataFrame:
         F.expr("(n_req - n_5xx) * 1000000 DIV n_req").alias(
             "availability_ppm"
         ),
-        F.expr(f"n_5xx * 1000000000 DIV (n_req * {int(target_ppm)})").alias(
+        F.expr(f"n_5xx * 1000000000 DIV (n_req * {SLO_TARGET_PPM})").alias(
             "burn_milli"
         ),
-        F.expr(f"n_5xx * 1000000 > n_req * {int(target_ppm)}").alias(
-            "breached"
-        ),
+        slo_breached(),
     )

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from logspark import pipeline
+from logspark import pipeline, status
 
 # Shuffle partitions a drain's stream starts with. Stateful streaming
 # operators instantiate ONE state store per shuffle partition per
@@ -450,11 +450,9 @@ def start_fanout_stream(
     )
 
 
-def slo_alerts_via_stream(
-    spark: SparkSession, corpus: DataFrame, target_ppm: int = 1000
-) -> DataFrame:
+def slo_alerts_via_stream(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     """Streaming SLO monitor: per (source, day, hour) request / 5xx
-    counts with an integer-exact breach flag against a 99.9% target —
+    counts with the batch ledger's breach flag (``status.slo_breached``) —
     the alerting view a production log pipeline keeps hot while the
     batch ledger (status.slo_error_budget) runs daily.
 
@@ -486,8 +484,6 @@ def slo_alerts_via_stream(
             "hour",
             "n_req",
             "n_5xx",
-            F.expr(f"n_5xx * 1000000 > n_req * {int(target_ppm)}").alias(
-                "breached"
-            ),
+            status.slo_breached(),
         )
         return drain(spark, out, "complete", f"{base}/ck")

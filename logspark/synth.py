@@ -19,7 +19,7 @@ def corpus(spark: SparkSession, n: int, start: int = 0, partitions: int | None =
     df = spark.sql(gen_sql.corpus_sql(rel)).select("doc_id", "source", "line")
     if partitions:
         df = df.repartition(partitions)
-    return tokens.tokenize_map_in_arrow(df, "line").drop("line")
+    return tokens.tokenize_map_in_arrow(df).drop("line")
 
 
 def write_corpus(

@@ -24,16 +24,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def tokenize(line_col: str | Column) -> Column:
-    """line -> array<int> of code points (generator-side helper, JVM).
-    Accepts a column name or a Column expression (e.g. a scrubbed line)."""
-    line = F.col(line_col) if isinstance(line_col, str) else line_col
+def tokenize(line: Column) -> Column:
+    """line -> array<int> of code points (JVM)."""
     return F.transform(F.split(line, ""), lambda c: F.ascii(c).cast("int"))
 
 
-def with_tokens(df: DataFrame, line_col: str = "line") -> DataFrame:
-    """Attach (tokens, n_tok) derived from a line column (generator side)."""
-    return df.withColumn("tokens", tokenize(line_col)).withColumn(
+def with_tokens(df: DataFrame) -> DataFrame:
+    """Attach (tokens, n_tok) derived from the ``line`` column."""
+    return df.withColumn("tokens", tokenize(F.col("line"))).withColumn(
         "n_tok", F.size("tokens")
     )
 
@@ -43,9 +41,9 @@ def with_tokens(df: DataFrame, line_col: str = "line") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def detokenize_expr(tokens_col: str = "tokens") -> Column:
+def detokenize_expr() -> Column:
     """tokens -> line, pure Spark SQL."""
-    return F.array_join(F.transform(F.col(tokens_col), lambda t: F.char(t)), "")
+    return F.array_join(F.transform(F.col("tokens"), lambda t: F.char(t)), "")
 
 
 def _detok_list_array(arr: pa.Array) -> pa.Array:
@@ -89,17 +87,15 @@ def _detok_list_array(arr: pa.Array) -> pa.Array:
     )
 
 
-def detokenize_map_in_arrow(
-    df: DataFrame, tokens_col: str = "tokens", out: str = "line"
-) -> DataFrame:
+def detokenize_map_in_arrow(df: DataFrame) -> DataFrame:
     """Zero-copy Arrow detokenization via mapInArrow (all columns pass
-    through; a new ``out`` string column is appended). The reference the
+    through; a new ``line`` string column is appended). The reference the
     tests hold ``detokenize_expr`` to."""
     import pyspark.sql.types as T
 
-    schema = T.StructType(df.schema.fields + [T.StructField(out, T.StringType())])
-    idx = df.columns.index(tokens_col)
-    names = df.columns + [out]
+    schema = T.StructType(df.schema.fields + [T.StructField("line", T.StringType())])
+    idx = df.columns.index("tokens")
+    names = df.columns + ["line"]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -114,8 +110,9 @@ def detokenize_map_in_arrow(
 # ---------------------------------------------------------------------------
 
 
-def tokenize_map_in_arrow(df: DataFrame, line_col: str = "line") -> DataFrame:
-    """Inverse of detokenize_map_in_arrow: appends (tokens, n_tok)."""
+def tokenize_map_in_arrow(df: DataFrame) -> DataFrame:
+    """Inverse of detokenize_map_in_arrow: appends (tokens, n_tok) derived
+    from the ``line`` column."""
     import numpy as np
     import pyspark.sql.types as T
 
@@ -126,7 +123,7 @@ def tokenize_map_in_arrow(df: DataFrame, line_col: str = "line") -> DataFrame:
             T.StructField("n_tok", T.IntegerType()),
         ]
     )
-    idx = df.columns.index(line_col)
+    idx = df.columns.index("line")
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:

@@ -12,7 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from logspark.session import get_spark
 
-    s = get_spark(cores=8, app="logspark-tests", shuffle_partitions=16)
+    s = get_spark(cores=8, app="logspark-tests")
     yield s
 
 

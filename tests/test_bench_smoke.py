@@ -1,10 +1,9 @@
 """Smoke test for bench.py — the driver's per-round feedback loop.
 
 bench.py is the one script the round driver runs unattended; a refactor
-that breaks its JSON contract (or its subprocess level-runner plumbing)
-would silently cost a round of benchmark signal. This test runs the real
-script end-to-end at toy scale — tiny corpus, scaling pairs skipped, a
-single headline query — and asserts the driver-facing contract:
+that breaks its JSON contract would silently cost a round of benchmark
+signal. This test runs the real script end-to-end at toy scale — tiny
+corpus, two queries — and asserts the driver-facing contract:
 ONE parseable JSON line with metric/value/unit/queries/sf plus the
 pipeline and fanout_write sections.
 """
@@ -27,8 +26,6 @@ def test_bench_emits_driver_contract_json(tmp_path):
             "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
             "SPARK_GRAFT_CPUS": "4",
             "BENCH_CORPUS_ROWS": "20000",
-            "BENCH_SCALING": "0",  # skip the cpuset scaling pairs
-            "BENCH_SAT": "0",
             "BENCH_REPS": "1",
             "BENCH_QUERIES": "log_route_counts,dedup_exact",
             # keep the toy corpus out of the real bench cache
@@ -78,7 +75,7 @@ def test_bench_emits_driver_contract_json(tmp_path):
     fan = r["fanout_write"]
     assert fan["rows"] == 20000 and fan["sec"] > 0
 
-    # scaling was explicitly skipped — the section must be absent, not junk
+    # bench.py measures no scaling: the section must be absent, not junk
     assert "scaling" not in r
 
     # full detail goes to the sidecar the compact line points at

@@ -10,7 +10,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from logspark import pipeline
+from logspark import pipeline, tokens
 
 FIXTURES = [
     # (name, source, line, expected dict)
@@ -132,7 +132,9 @@ FIXTURES = [
 def parsed(spark):
     rows = [(name, src, line) for name, src, line in [(n, s, l) for n, s, l, _ in FIXTURES]]
     df = spark.createDataFrame(rows, "name string, source string, line string")
-    out = pipeline.routed_hits(spark, df).withColumn(
+    # tokenized like the corpus, so the golden lines also pass the codec
+    corpus = tokens.with_tokens(df).drop("line")
+    out = pipeline.routed_hits(spark, corpus).withColumn(
         "ts_s", F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
     )
     return {r["name"]: r.asDict() for r in out.collect()}

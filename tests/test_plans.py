@@ -92,7 +92,7 @@ def test_enrich_lookup_is_broadcast(spark, corpus_parquet):
     from logspark import parse, pipeline
 
     df = pipeline.detokenized(spark.read.parquet(corpus_parquet))
-    df = parse.parse_lines(df, "line")
+    df = parse.parse_lines(df)
     df = parse.enriched_ext_kind(df, spark)
     txt = plan_text(df)
     assert "BroadcastHashJoin" in txt
@@ -590,7 +590,7 @@ def test_referrer_attribution_is_broadcast(spark, corpus_parquet):
     from logspark import enrich, parse, pipeline
 
     df = pipeline.detokenized(spark.read.parquet(corpus_parquet))
-    df = parse.parse_lines(df, "line")
+    df = parse.parse_lines(df)
     df = enrich.with_referrer_attribution(df, spark)
     txt = plan_text(df)
     assert "BroadcastHashJoin" in txt
@@ -619,7 +619,7 @@ def test_visit_stats_single_visitor_shuffle(spark, corpus_parquet, report):
     from logspark import parse, pipeline, visits
 
     df = pipeline.detokenized(spark.read.parquet(corpus_parquet))
-    df = parse.parse_lines(df, "line").filter("parsed_ok")
+    df = parse.parse_lines(df).filter("parsed_ok")
     txt = plan_text(getattr(visits, report)(df))
     budget = 3 if report in ("entry_exit_pages", "visit_hours") else 2
     assert shuffle_count(txt) <= budget, txt

@@ -37,10 +37,10 @@ def test_codec_roundtrip(spark, arrays):
         rows, "doc_id string, source string, tokens array<int>, n_tok int"
     )
     # JVM expression detok, then Arrow tokenizer back
-    lines = df.withColumn("line", tk.detokenize_expr("tokens")).drop(
+    lines = df.withColumn("line", tk.detokenize_expr()).drop(
         "tokens", "n_tok"
     )
-    back = tk.tokenize_map_in_arrow(lines, "line")
+    back = tk.tokenize_map_in_arrow(lines)
     joined = (
         df.alias("a")
         .join(back.alias("b"), "doc_id")
@@ -71,8 +71,8 @@ def test_arrow_detok_parity_any_input(spark, arrays):
     df = spark.createDataFrame(
         rows, "doc_id string, source string, tokens array<int>, n_tok int"
     )
-    arrow = tk.detokenize_map_in_arrow(df, "tokens", out="line")
-    jvm = df.withColumn("line_j", tk.detokenize_expr("tokens"))
+    arrow = tk.detokenize_map_in_arrow(df)
+    jvm = df.withColumn("line_j", tk.detokenize_expr())
     joined = (
         arrow.select("doc_id", "line")
         .join(jvm.select("doc_id", "line_j"), "doc_id")

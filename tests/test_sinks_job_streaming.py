@@ -706,9 +706,7 @@ def test_job_anonymize_ip_scrubs_sinks(spark, tmp_path):
 
     # NO sink column can reconstruct a raw address: detokenize the stored
     # token arrays and scan every string-typed column for any raw IP
-    detok = sinks_df.withColumn(
-        "_line", tokens.detokenize_expr("tokens")
-    )
+    detok = sinks_df.withColumn("_line", tokens.detokenize_expr())
     str_cols = [
         f.name
         for f in detok.schema.fields
@@ -737,9 +735,9 @@ def test_anonymize_ip_flag_validation():
         job.main(["--input", "x", "--output", "y", "--checkpoint", "z",
                   "--anonymize-ip", "-1"])
     with pytest.raises(ValueError):
-        enrich.anonymize_ip("ip", keep_octets=-1)
+        enrich.anonymize_ip(keep_octets=-1)
     with pytest.raises(ValueError):
-        enrich.anonymize_ip("ip", keep_octets=5)
+        enrich.anonymize_ip(keep_octets=5)
 
 
 def test_streaming_slo_alerts_matches_batch_ledger(spark, small_corpus):

@@ -347,7 +347,7 @@ def test_anonymize_ip(spark):
     df = spark.createDataFrame(
         [("10.1.2.3",), ("192.168.255.254",), (None,)], "ip string"
     )
-    got = [r["a"] for r in df.select(enrich.anonymize_ip("ip").alias("a")).collect()]
+    got = [r["a"] for r in df.select(enrich.anonymize_ip().alias("a")).collect()]
     assert got == ["10.1.2.0", "192.168.255.0", None]
 
 

@@ -21,8 +21,8 @@ def test_detokenizer_parity(spark, small_corpus):
 def test_tokenize_roundtrip_vs_jvm(spark):
     """Arrow tokenizer == JVM tokenizer, and detok(tok(line)) == line."""
     lines = synth.corpus_with_lines(spark, 500)
-    arrow = tokens.tokenize_map_in_arrow(lines, "line")
-    jvm = tokens.with_tokens(lines, "line").select(
+    arrow = tokens.tokenize_map_in_arrow(lines)
+    jvm = tokens.with_tokens(lines).select(
         "doc_id", F.col("tokens").alias("tokens_j")
     )
     bad = (
@@ -31,7 +31,7 @@ def test_tokenize_roundtrip_vs_jvm(spark):
         .count()
     )
     assert bad == 0
-    back = arrow.withColumn("line2", tokens.detokenize_expr("tokens"))
+    back = arrow.withColumn("line2", tokens.detokenize_expr())
     assert back.filter(F.col("line") != F.col("line2")).count() == 0
 
 
@@ -45,7 +45,7 @@ def test_detok_arrow_non_ascii_nulls_and_slices(spark):
     texts = ["héllo wörld", "naïve café", "plain ascii", "", "日本語テキスト"]
     rows = [(i, [ord(c) for c in t]) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id int, tokens array<int>")
-    out = tokens.detokenize_map_in_arrow(df, "tokens", out="line")
+    out = tokens.detokenize_map_in_arrow(df)
     got = {r["doc_id"]: r["line"] for r in out.collect()}
     assert got == dict(enumerate(texts))
 

@@ -301,12 +301,46 @@ def test_bot_velocity_flags_burst_ip(spark):
         [(ip, ts, True) for ip, ts in rows],
         "ip string, ts timestamp, parsed_ok boolean",
     )
-    out = {r["ip"]: r for r in rules.bot_velocity(df, threshold=5).collect()}
+    out = {r["ip"]: r for r in rules.bot_velocity(df).collect()}
     hot = out["9.9.9.9"]
     assert (hot["total_hits"], hot["n_active_minutes"], hot["max_per_minute"]) == (7, 2, 6)
     assert hot["flagged"] is True
     calm = out["1.1.1.1"]
     assert calm["max_per_minute"] == 1 and calm["flagged"] is False
+
+
+def test_bot_velocity_months_apart_matches_oracle(spark):
+    """The same minute of the same day-of-month in two different months
+    is two active minutes, in Spark and in the DuckDB oracle alike (the
+    oracle's routed relation swapped for the same two hits)."""
+    import datetime
+
+    import duckdb
+
+    import __spark_entry__ as entry
+    from logspark import rules
+
+    hits = [
+        ("10.0.0.7", datetime.datetime(2024, 3, 3, 10, 15)),
+        ("10.0.0.7", datetime.datetime(2024, 4, 3, 10, 15)),
+    ]
+    df = spark.createDataFrame(
+        [(ip, ts, True) for ip, ts in hits],
+        "ip string, ts timestamp, parsed_ok boolean",
+    )
+    got = [tuple(r) for r in rules.bot_velocity(df).collect()]
+
+    values = ", ".join(
+        f"('{ip}', '{ts:%Y-%m-%d}', '{ts:%d}', '{ts:%H}', '{ts:%M}', false)"
+        for ip, ts in hits
+    )
+    rel = f"SELECT * FROM (VALUES {values}) v(ip, iso_date, dd, hh, mi, corrupt)"
+    sql = entry.oracle_sql()["bot_velocity"]
+    assert entry._ORACLE_ROUTED in sql
+    with duckdb.connect() as con:
+        want = con.execute(sql.replace(entry._ORACLE_ROUTED, rel)).fetchall()
+
+    assert got == want == [("10.0.0.7", 2, 2, 1, False)]
 
 
 def test_trending_paths_growth_and_first_day(spark):
@@ -335,9 +369,12 @@ def test_trending_paths_growth_and_first_day(spark):
     )
     got = [
         (r["stem"], r["day"], r["growth"])
-        for r in actions.trending_paths(df, k=3).collect()
+        for r in actions.trending_paths(df).collect()
     ]
-    assert got == [("/a", 2, 8), ("/c", 1, 7), ("/b", 2, 5)]
+    # all five (stem, day) rows fit in the top TRENDING_TOP_K
+    assert got == [
+        ("/a", 2, 8), ("/c", 1, 7), ("/b", 2, 5), ("/a", 1, 2), ("/c", 2, -4)
+    ]
 
 
 def test_pages_per_visit_bucket_boundaries(spark):
