@@ -122,11 +122,15 @@ class CheckpointStore:
 
     def read(self) -> DataFrame:
         """The control rows. A missing directory is an empty store (the
-        first run); any other read error raises, so a corrupt store is
-        never mistaken for an empty one and replayed in full."""
+        first run). The read takes ``CONTROL_SCHEMA`` instead of inferring
+        one, so a store whose first append was killed, which holds only the
+        committer's ``_temporary/`` staging files, reads as the zero rows it
+        committed; a committed file that cannot be read still raises, so a
+        corrupt store is never mistaken for an empty one and replayed in
+        full."""
         if not self.exists():
             return local_table(self.spark, [], CONTROL_SCHEMA)
-        return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(CONTROL_SCHEMA).parquet(self.path)
 
     def committed_ids(self) -> DataFrame:
         return (

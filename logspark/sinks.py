@@ -7,12 +7,10 @@ table writes (BASELINE.json north_star sinks).
 Scale design:
   * ONE pass over the routed rows — ``partitionBy('sink')`` fan-out, never
     five filtered re-scans.
-  * One write distribution. With a partition column besides ``sink`` (the
-    job's ``part_id``), rows are repartitioned on it, so each directory is
-    written by one task; part_id is a hash of doc_id, so that shuffle has
-    no skew even though ``visits`` holds about half the rows. With
-    ``sink`` alone there is no shuffle, and each task writes into every
-    sink it touches.
+  * One write distribution: rows are repartitioned on the partition
+    columns other than ``sink`` (the job's ``part_id``), so each directory
+    is written by one task; part_id is a hash of doc_id, so that shuffle
+    has no skew even though ``visits`` holds about half the rows.
   * Idempotent re-runs: dynamic partition overwrite — re-processing a
     partition replaces exactly its own files (parquet fallback for Iceberg's
     atomic overwritePartitions). The production job layers ``part_id`` into
@@ -23,8 +21,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 SINK_COLUMNS = [
     "doc_id",
@@ -47,21 +44,17 @@ SINK_COLUMNS = [
 def write_fanout(
     routed: DataFrame,
     out_dir: str,
+    partition_cols: list[str],
     mode: str = "overwrite",
     distribution: str = "partitioned",
-    partition_cols: list[str] | None = None,
 ) -> None:
-    """Fan-out write, physically partitioned by ``partition_cols`` (default
-    ['sink']).
+    """Fan-out write, physically partitioned by ``partition_cols``.
 
-    When ``partition_cols`` holds columns other than ``sink``, rows are
-    repartitioned on those columns, so each directory is written by exactly
-    ONE task and gets one file per 1,000,000 rows (Iceberg
-    write.distribution-mode=hash analog); a column that is constant within
-    ``routed`` therefore gets one writer task. With ``sink`` alone there is
-    no shuffle: each input task writes into every sink directory it
-    touches. ``distribution`` names this one distribution and accepts
-    nothing else.
+    Rows are repartitioned on the partition columns other than ``sink``,
+    so each directory is written by exactly ONE task and gets one file per
+    1,000,000 rows (Iceberg write.distribution-mode=hash analog); a column
+    that is constant within ``routed`` therefore gets one writer task.
+    ``distribution`` names this one distribution and accepts nothing else.
 
     The production job passes ['sink', 'part_id'] so that mode='overwrite'
     + dynamic partition overwrite replaces exactly the (sink, part_id)
@@ -70,16 +63,14 @@ def write_fanout(
     """
     if distribution != "partitioned":
         raise ValueError(f"unknown distribution {distribution!r}; only 'partitioned'")
-    pcols = partition_cols or ["sink"]
     cols = [c for c in SINK_COLUMNS if c in routed.columns] + [
-        c for c in pcols if c not in SINK_COLUMNS
+        c for c in partition_cols if c not in SINK_COLUMNS
     ]
-    df = routed.select(*dict.fromkeys(cols + pcols))
-    extra = [c for c in pcols if c != "sink"]
-    if extra:
-        df = df.repartition(*extra)
+    df = routed.select(*dict.fromkeys(cols + partition_cols)).repartition(
+        *[c for c in partition_cols if c != "sink"]
+    )
     (
-        df.write.partitionBy(*pcols)
+        df.write.partitionBy(*partition_cols)
         .mode(mode)
         .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", 1_000_000)
@@ -92,7 +83,3 @@ def write_fanout(
         .option("compression", "zstd")
         .parquet(out_dir)
     )
-
-
-def read_sink(spark: SparkSession, out_dir: str, sink: str) -> DataFrame:
-    return spark.read.parquet(out_dir).filter(F.col("sink") == sink)

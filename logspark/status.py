@@ -1,13 +1,13 @@
-"""Date-status rollup: per-(source, date) quota aggregation + guarded upsert.
+"""Date-status rollup: per-(source, date) quota aggregation.
 
 Re-expression of the reference's per-date state machine:
   * compute_date_status (/root/reference/libs/lib_status.py:56-82): count
     LOADED files per date, compare to a per-collection expected quota with
     **date-regime switches** (scl 2021-05-25, nbr 2022-04-05/2022-05-08,
     lib_status.py:62-75) -> LOADED / PARTIAL / QUEUE.
-  * update_date_status (/root/reference/libs/lib_database.py:120-151):
-    upsert one row per (collection, date) — update only when the existing
-    status is QUEUE or PARTIAL (guarded transition, :134-136).
+  * update_date_status (/root/reference/libs/lib_database.py:120-151) has
+    no counterpart: the rollup is recomputed from the visit rows on every
+    report pass, so there is no stored date-status table to upsert into.
 
 Quotas are an in-code list, ``DEFAULT_QUOTAS``, like the reference's
 COLLECTION_TO_EXPECTED_DAILY_STATUS_SUM dict (lib_status.py:21-53). The
@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-S_QUEUE, S_PARTIAL, S_LOADED, S_COMPLETED = 0, 1, 2, 5
+S_QUEUE, S_PARTIAL, S_LOADED = 0, 1, 2
 
 # (source, regime_start | None, expected): a dated regime applies when
 # log_date > regime_start, and the latest applicable one wins; the None row
@@ -68,34 +68,6 @@ def rollup_date_status(routed: DataFrame, spark: SparkSession) -> DataFrame:
         .otherwise(S_QUEUE)
     )
     return agg.withColumn("status", status)
-
-
-def guarded_upsert(existing: DataFrame, updates: DataFrame) -> DataFrame:
-    """Upsert per (source, log_date): update only rows whose existing status
-    is QUEUE or PARTIAL; insert absent rows (lib_database.py:131-145)."""
-    e = existing.select(
-        "source",
-        "log_date",
-        F.col("loaded").alias("loaded_old"),
-        F.col("expected").alias("expected_old"),
-        F.col("status").alias("status_old"),
-    )
-    u = updates.select("source", "log_date", "loaded", "expected", "status")
-    j = e.join(u, ["source", "log_date"], "full_outer")
-    updatable = F.col("status_old").isNull() | F.col("status_old").isin(
-        S_QUEUE, S_PARTIAL
-    )
-    take_new = updatable & F.col("status").isNotNull()
-    pick = lambda n, o: F.when(take_new, F.col(n)).otherwise(  # noqa: E731
-        F.coalesce(F.col(o), F.col(n))
-    )
-    return j.select(
-        "source",
-        "log_date",
-        pick("loaded", "loaded_old").alias("loaded"),
-        pick("expected", "expected_old").alias("expected"),
-        pick("status", "status_old").alias("status"),
-    )
 
 
 # the SLO's allowed error fraction in ppm: 1000 ppm is a 99.9% availability

@@ -7,8 +7,6 @@ route column expressions applied to a stream, with
 
   * file-source ingestion of tokenized-corpus parquet (or Iceberg
     ``readStream`` in production),
-  * watermarked tumbling-window per-route counts (late data bounded),
-  * ``foreachBatch`` fan-out to the per-sink writer (reuses logspark.sinks),
   * ``Trigger.AvailableNow`` for batch-parity testing: streaming counts must
     equal the batch pipeline's counts on the same input (test asserts this).
 
@@ -125,17 +123,6 @@ def read_corpus_stream(
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", max_files)
     return reader.parquet(path)
-
-
-def windowed_route_counts(routed: DataFrame, window: str = "1 hour") -> DataFrame:
-    """Watermarked tumbling-window aggregation over event time (late rows
-    beyond 2h dropped deterministically)."""
-    return (
-        routed.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", window).alias("w"), F.col("route"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("win_start"), "route", "cnt")
-    )
 
 
 def route_counts_via_stream(spark: SparkSession, corpus: DataFrame) -> DataFrame:
@@ -418,36 +405,6 @@ def click_attribution_stream(
             ),
         ).select("view_id", "click_id", "user_id")
         return drain(spark, joined, "append", f"{base}/ck")
-
-
-def start_fanout_stream(
-    spark: SparkSession, corpus_path: str, out_dir: str, checkpoint: str
-):
-    """foreachBatch fan-out, exactly-once via epoch-keyed dynamic overwrite.
-
-    foreachBatch is at-least-once: after a mid-batch kill the restarted
-    stream REPLAYS the uncommitted epoch. Appending would duplicate those
-    rows; instead each batch writes its sinks under its own ``epoch=N``
-    directory with dynamic partition overwrite, so a replay REPLACES its own
-    epoch's files — the same commit protocol as job.py, keyed by epoch
-    instead of part_id. (Production Iceberg: overwritePartitions per
-    epoch.) The epoch is a directory, not a partition column of the write:
-    as a column it would be constant within the batch, and
-    ``sinks.write_fanout`` would shuffle the whole batch onto one writer
-    task."""
-    from logspark import sinks
-
-    routed = pipeline.routed_hits(spark, read_corpus_stream(spark, corpus_path))
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        sinks.write_fanout(batch_df, f"{out_dir}/epoch={int(epoch_id)}")
-
-    return (
-        routed.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def slo_alerts_via_stream(spark: SparkSession, corpus: DataFrame) -> DataFrame:

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from logspark import gen_sql, pipeline, tokens
+from logspark import gen_sql, tokens
 
 
 def corpus(spark: SparkSession, n: int, start: int = 0, partitions: int | None = None) -> DataFrame:
@@ -26,9 +26,3 @@ def write_corpus(
     spark: SparkSession, n: int, path: str, partitions: int | None = None
 ) -> None:
     corpus(spark, n, partitions=partitions).write.mode("overwrite").parquet(path)
-
-
-def corpus_with_lines(spark: SparkSession, n: int, start: int = 0) -> DataFrame:
-    """Variant that keeps the raw line (fixture/golden generation)."""
-    rel = gen_sql.rel_from_range(n, start)
-    return spark.sql(gen_sql.corpus_sql(rel)).select("doc_id", "source", "line")

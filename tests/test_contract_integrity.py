@@ -5,6 +5,8 @@ binding — a duplicated query name in ``queries()`` or ``oracle_sql()``
 would shadow an implementation (or pair a query with the wrong oracle)
 with no runtime error anywhere. These tests parse the module's AST and
 fail on the duplicate itself, at the source, without starting Spark.
+The same kind of scan keeps public names that only tests reach out of the
+log-pipeline modules.
 """
 
 import ast
@@ -128,3 +130,83 @@ def test_memo_builds_once_and_keeps_one_sf_dir_per_session(spark, monkeypatch):
     assert len(built) == 3
 
     assert entrymod._routed(spark, sf_a) is entrymod._routed(spark, sf_a)
+
+
+
+# The contract's operator modules outside the log pipeline, frozen this
+# round; every other module in logspark/ is a log-pipeline module and is
+# scanned for dead names.
+FROZEN_MODULES = set(
+    "__init__ asof bpe cluster export layout multimodal packing portable_hash "
+    "rangejoin scd simsearch sketch textops timeutil".split()
+)
+
+# Public names kept although only tests reach them, because a test uses
+# them as the expected result.
+DEAD_NAME_ALLOWLIST = {
+    # the Arrow reference detokenizer the JVM codec is checked against
+    "tokens.detokenize_map_in_arrow",
+    # the monotonic MERGE semantics the Iceberg catalog test expects
+    "control.merge_status",
+}
+
+
+def _public_definitions(tree: ast.Module):
+    """(name, top-level statement) for each public function, class and
+    constant, tuple assignment targets expanded."""
+    for stmt in tree.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names = [stmt.name]
+        elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+            targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+            names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+        else:
+            continue
+        for name in names:
+            if not name.startswith("_"):
+                yield name, stmt
+
+
+def _referenced_names(node: ast.AST) -> set[str]:
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            out.update(a.name for a in n.names)
+    return out
+
+
+def test_pipeline_modules_define_no_unreferenced_names():
+    """Every public top-level name in the log-pipeline modules is referenced
+    somewhere outside its own definition, counting references in
+    ``logspark/``, ``__spark_entry__.py``, ``bench.py`` and ``perfbench/``
+    (the job, the reports, the contract and the benchmarks). Tests do not
+    count: code that only a test reaches is not kept "for later". A
+    reference is a bare name, so a same-named local elsewhere also counts.
+    Spark-free: the check only parses source."""
+    root = os.path.join(os.path.dirname(__file__), os.pardir)
+    rels = ["__spark_entry__.py", "bench.py"] + [
+        f"{d}/{f}"
+        for d in ("logspark", "perfbench")
+        for f in sorted(os.listdir(os.path.join(root, d)))
+        if f.endswith(".py")
+    ]
+    trees = {}
+    for rel in rels:
+        with open(os.path.join(root, rel)) as fh:
+            trees[rel] = ast.parse(fh.read())
+    refs = [(s, _referenced_names(s)) for t in trees.values() for s in t.body]
+
+    dead = []
+    for rel, tree in trees.items():
+        mod = rel[len("logspark/") : -len(".py")]
+        if not rel.startswith("logspark/") or mod in FROZEN_MODULES:
+            continue
+        for name, own in _public_definitions(tree):
+            used = any(name in names for s, names in refs if s is not own)
+            if not used and f"{mod}.{name}" not in DEAD_NAME_ALLOWLIST:
+                dead.append(f"{mod}.{name}")
+    assert not dead, f"public names nothing outside tests references: {dead}"

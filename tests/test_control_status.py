@@ -1,11 +1,11 @@
-"""Control-plane semantics: resume anti-join, monotonic status, quota
-rollup with regimes, guarded date-status upsert, retention joins."""
+"""Control-plane semantics: resume as a literal ``part_id`` filter (not an
+anti-join), monotonic status, quota rollup with regimes."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from logspark import control, pipeline, retention, status
+from logspark import control, pipeline, status
 
 
 def test_resume_anti_join(spark, small_corpus, tmp_path):
@@ -99,86 +99,6 @@ def test_date_status_latest_regime_wins(spark, monkeypatch):
     }
 
 
-def test_guarded_date_status_upsert(spark):
-    cols = "source STRING, log_date DATE, loaded BIGINT, expected INT, status INT"
-    import datetime as dt
-
-    d = dt.date(2024, 3, 1)
-    existing = spark.createDataFrame(
-        [("a", d, 5, 10, status.S_COMPLETED), ("b", d, 1, 10, status.S_PARTIAL)], cols
-    )
-    updates = spark.createDataFrame(
-        [("a", d, 9, 10, status.S_PARTIAL), ("b", d, 10, 10, status.S_LOADED),
-         ("c", d, 2, 10, status.S_PARTIAL)], cols
-    )
-    out = {r["source"]: r for r in status.guarded_upsert(existing, updates).collect()}
-    assert out["a"]["status"] == status.S_COMPLETED  # locked (not QUEUE/PARTIAL)
-    assert out["a"]["loaded"] == 5
-    assert out["b"]["status"] == status.S_LOADED  # advanced from PARTIAL
-    assert out["c"]["status"] == status.S_PARTIAL  # inserted
-
-
-def test_retention_split_is_partition(spark, small_corpus):
-    routed = pipeline.routed_hits(spark, small_corpus)
-    ds = status.rollup_date_status(routed, spark)
-    # promote LOADED dates to COMPLETED (the reference's export step does this)
-    completed = ds.withColumn(
-        "status",
-        F.when(F.col("status") == status.S_LOADED, status.S_COMPLETED).otherwise(
-            F.col("status")
-        ),
-    )
-    keep = retention.retained(routed, completed).count()
-    retire = retention.rows_to_retire(routed, completed).count()
-    assert keep + retire == routed.count()
-    assert retire > 0
-
-
-def test_retention_archive_and_retire(spark, small_corpus, tmp_path):
-    """S7 parity (clean_data.py:28-52): COMPLETED dates are rewritten into
-    a gzip archive and dropped from the live table; counts conserve; a
-    crash-replay (archive written, delete skipped) does not duplicate."""
-    import glob
-
-    routed = pipeline.routed_hits(spark, small_corpus).withColumn(
-        "log_date", F.to_date("ts")
-    )
-    live = str(tmp_path / "live")
-    routed.write.partitionBy("source", "log_date").parquet(live)
-    total = spark.read.parquet(live).count()
-
-    ds = status.rollup_date_status(pipeline.routed_hits(spark, small_corpus), spark)
-    completed = ds.withColumn(
-        "status",
-        F.when(F.col("status") == status.S_LOADED, status.S_COMPLETED).otherwise(
-            F.col("status")
-        ),
-    )
-    arch = str(tmp_path / "archive")
-    res = retention.archive_and_retire(spark, live, completed, arch)
-    assert res["archived_rows"] > 0
-
-    left = spark.read.parquet(live)
-    archived = spark.read.parquet(arch)
-    assert left.count() + archived.count() == total  # conservation
-    # retired (source, date) pairs are fully gone from live
-    gone = {(str(s), str(d)) for s, d in res["pairs"]}
-    still = {
-        (str(r["source"]), str(r["log_date"]))
-        for r in left.select("source", "log_date").distinct().collect()
-    }
-    assert not (gone & still)
-    # archived bytes exist and are gzip-compressed parquet
-    files = glob.glob(arch + "/source=*/log_date=*/*.parquet")
-    assert files and all(".gz." in f for f in files)
-
-    # crash-replay: run again with the SAME completed set (live dirs already
-    # gone -> retire slice empty on live side, archive must not change)
-    n_arch = archived.count()
-    retention.archive_and_retire(spark, live, completed, arch)
-    assert spark.read.parquet(arch).count() == n_arch
-
-
 def test_retry_adjusted_progress(spark):
     from logspark import control
 
@@ -196,36 +116,6 @@ def test_retry_adjusted_progress(spark):
     assert rows[110_000] == (0, control.FAILED)
     assert rows[50_000] == (0, control.FAILED)
     assert rows[0] == (0, control.FAILED)
-
-
-def test_retention_archive_handles_escaped_partition_names(spark, tmp_path):
-    """Source values Spark URL-escapes in partition paths (spaces, '=')
-    must still be deleted from live — the delete discovers directories and
-    DECODES their names instead of rebuilding path strings."""
-    import datetime as dt
-
-    import pyspark.sql.functions as F2
-
-    rows = [
-        ("srv a=1", dt.datetime(2024, 3, 1, 10), i) for i in range(5)
-    ] + [("plain", dt.datetime(2024, 3, 2, 10), i) for i in range(5)]
-    data = spark.createDataFrame(rows, "source string, ts timestamp, n int")
-    live = str(tmp_path / "elive")
-    data.withColumn("log_date", F2.to_date("ts")).write.partitionBy(
-        "source", "log_date"
-    ).parquet(live)
-
-    ds = spark.createDataFrame(
-        [("srv a=1", dt.date(2024, 3, 1), status.S_COMPLETED)],
-        "source string, log_date date, status int",
-    )
-    arch = str(tmp_path / "earch")
-    res = retention.archive_and_retire(spark, live, ds, arch)
-    assert res["archived_rows"] == 5
-    left = spark.read.parquet(live)
-    assert left.count() == 5  # escaped-name partition really deleted
-    assert left.filter(F2.col("source") == "srv a=1").count() == 0
-    assert spark.read.parquet(arch).count() == 5
 
 
 def test_scd2_apply_all_merge_arms(spark):

@@ -4,7 +4,13 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from logspark import pipeline, route, synth, tokens
+from logspark import gen_sql, pipeline, route, tokens
+
+
+def _corpus_with_lines(spark, n):
+    """The synthetic corpus's (doc_id, source, line), before tokenizing."""
+    rel = gen_sql.rel_from_range(n, 0)
+    return spark.sql(gen_sql.corpus_sql(rel)).select("doc_id", "source", "line")
 
 
 def test_detokenizer_parity(spark, small_corpus):
@@ -20,7 +26,7 @@ def test_detokenizer_parity(spark, small_corpus):
 
 def test_tokenize_roundtrip_vs_jvm(spark):
     """Arrow tokenizer == JVM tokenizer, and detok(tok(line)) == line."""
-    lines = synth.corpus_with_lines(spark, 500)
+    lines = _corpus_with_lines(spark, 500)
     arrow = tokens.tokenize_map_in_arrow(lines)
     jvm = tokens.with_tokens(lines).select(
         "doc_id", F.col("tokens").alias("tokens_j")
